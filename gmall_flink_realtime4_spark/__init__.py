@@ -19,6 +19,7 @@ Layout:
   tables.py     driver-testdata loaders + reference-domain adapters
   plans/        batch/streaming-unified query definitions + oracle registry
   operators/    reusable operator library (dedup, windows, joins, split, state)
+                + the shared LLM kernels (text, vectors, topk)
   functions/    scalar/UDF surface (dates, json, tokenizer)
   sources/      Kafka / file / rate / CDC-envelope source factories
   sinks/        Kafka / parquet-upsert / console sink factories

@@ -25,8 +25,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
+from ..operators.text import hexval_sql
+from ..tables import EVENT_TYPES
 from .catalog import query
-from .llm_scale_queries import _hexval_sql
 
 # ---------------------------------------------------------------------------
 # llm_mix_domains — data-mixture balancing (the Pile / Dolma-style source
@@ -43,8 +44,8 @@ from .llm_scale_queries import _hexval_sql
 # budget*weight product needs a DECIMAL upgrade (documented, not needed at
 # any realistic corpus size: 1e12 docs x 1e9 weight fits in DECIMAL(38,0)).
 # ---------------------------------------------------------------------------
-_MIX_HV = _hexval_sql("hx", "instr")
-_MIX_HV_ORA = _hexval_sql("md5(CAST(doc_id AS VARCHAR) || ':mix')", "strpos")
+_MIX_HV = hexval_sql("hx", "instr")
+_MIX_HV_ORA = hexval_sql("md5(CAST(doc_id AS VARCHAR) || ':mix')", "strpos")
 
 
 @query(
@@ -228,8 +229,8 @@ def llm_text_rare_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # map-combined, ONE shuffle on `source`. 48-bit terms summed in DECIMAL(38)
 # (no overflow until ~1e22 rows/partition).
 # ---------------------------------------------------------------------------
-_CK_HV = _hexval_sql("hx", "instr")
-_CK_HV_ORA = _hexval_sql("md5(text || ':' || CAST(doc_id AS VARCHAR))", "strpos")
+_CK_HV = hexval_sql("hx", "instr")
+_CK_HV_ORA = hexval_sql("md5(text || ':' || CAST(doc_id AS VARCHAR))", "strpos")
 
 
 def checksum_partials(df: DataFrame) -> DataFrame:
@@ -398,9 +399,6 @@ def anomaly_finalize(partials: DataFrame) -> DataFrame:
 # single Generate over the wide row — map-only after the pivot's one
 # shuffle; no second pass over the fact.
 # ---------------------------------------------------------------------------
-_EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
 @query(
     "f_unpivot_event_day",
     oracle="""
@@ -427,11 +425,11 @@ def f_unpivot_event_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .corpus_ops_queries import f_pivot_event_day
 
     wide = f_pivot_event_day(spark, sf_dir)
-    stack = ", ".join(f"'{t}', {t}_ct, {t}_val" for t in _EVENT_TYPES)
+    stack = ", ".join(f"'{t}', {t}_ct, {t}_val" for t in EVENT_TYPES)
     return wide.select(
         "day",
         F.expr(
-            f"stack({len(_EVENT_TYPES)}, {stack}) AS (event_type, ct, val)"
+            f"stack({len(EVENT_TYPES)}, {stack}) AS (event_type, ct, val)"
         ),
     ).select("day", "event_type", F.col("ct").cast("bigint"), "val")
 

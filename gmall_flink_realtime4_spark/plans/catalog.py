@@ -94,6 +94,12 @@ GATE_PRIORITY: list[str] = [
     "f_skyline_pareto_suppliers",
     "llm_bpe_train_merges",
     "llm_bpe_encode_corpus",
+    # plan text changed by the operators/topk.py two-phase top-k fold
+    # (phase-1 and rank column names only; outputs identical), re-verified
+    # here; llm_ann_pq_adc_recall (above) changed the same way. They
+    # displace the 2 tail names, whose plans are untouched.
+    "llm_sample_domain_cap",
+    "llm_sample_reservoir",
     # the 40 r10-fresh names, r10 key order (includes the changed-plan
     # llm_dedup_edit_distance_verify and dq_referential_integrity)
     "llm_ann_pq_encode",
@@ -132,8 +138,6 @@ GATE_PRIORITY: list[str] = [
     "dq_null_profile",
     "dwd_trade_cart_add",
     "dwd_interaction_comment_info",
-    "dwd_trade_order_refund",
-    "dwd_base_db_router",
 ]
 
 

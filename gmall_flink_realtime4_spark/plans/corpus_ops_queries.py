@@ -21,8 +21,18 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
+from ..operators.text import (
+    KMV_M,
+    hexval_sql,
+    is_trigram,
+    minhash_candidates,
+    shingles,
+    shingles_sized,
+    trigrams,
+)
+from ..operators.vectors import VEC_DEC, qdec
+from ..tables import EVENT_TYPES, PPB
 from .catalog import query
-from .llm_scale_queries import _hexval_sql
 
 # ---------------------------------------------------------------------------
 # Chunk-level (paragraph) exact dedup — C4/RefinedWeb-style: the corpus is
@@ -133,8 +143,8 @@ def chunk_dedup(d: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Shared 3-gram occurrence construction (NON-distinct, unlike the jaccard
-# shingle helper) — mirrors llm_dedup_ngram_jaccard's proven index/guard.
+# Shared 3-gram occurrence construction (NON-distinct, unlike
+# operators.text.shingles) — the same trigram kernel and guard.
 # ---------------------------------------------------------------------------
 _TRIGRAM_CTE = """
 WITH toks AS (
@@ -150,18 +160,8 @@ def _trigram_occurrences(d: DataFrame) -> DataFrame:
     """Every 3-gram occurrence per doc (with multiplicity)."""
     return d.select(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(F.split("text", " ")) - 3, F.lit(0))),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.try_element_at(F.split(F.col("text"), " "), i + 1),
-                    F.try_element_at(F.split(F.col("text"), " "), i + 2),
-                    F.try_element_at(F.split(F.col("text"), " "), i + 3),
-                ),
-            )
-        ).alias("ngram"),
-    ).filter(F.size(F.split("ngram", " ")) == 3)
+        F.explode(trigrams(F.split(F.col("text"), " "))).alias("ngram"),
+    ).filter(is_trigram("ngram"))
 
 
 # ---------------------------------------------------------------------------
@@ -222,7 +222,6 @@ def llm_ngram_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tf-idf term salience — top terms per doc by an exact-integer tf/df score.
 # ---------------------------------------------------------------------------
 TFIDF_TOP_K = 3
-_PPB = 1_000_000_000
 
 
 @query(
@@ -236,7 +235,7 @@ WITH t AS (
     SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1
 ), s AS (
     SELECT tf.doc_id, tf.term, tf.tf, df.df,
-           (tf.tf * CAST({_PPB} AS BIGINT)) // df.df AS score_ppb
+           (tf.tf * CAST({PPB} AS BIGINT)) // df.df AS score_ppb
     FROM tf JOIN df USING (term)
 ), r AS (
     SELECT *, row_number() OVER (PARTITION BY doc_id
@@ -266,7 +265,7 @@ def llm_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = t.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     s = tf.join(F.broadcast(df), "term").withColumn(
-        "score_ppb", F.expr(f"(tf * CAST({_PPB} AS BIGINT)) div df")
+        "score_ppb", F.expr(f"(tf * CAST({PPB} AS BIGINT)) div df")
     )
     rnk = F.row_number().over(
         Window.partitionBy("doc_id").orderBy(F.col("score_ppb").desc(), "term")
@@ -329,7 +328,7 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     are integer per-mille, exact on both engines.
 
     Round 9 plan (the jaccard rewrite, same reasoning): every posting row
-    carries its doc's distinct-shingle count map-side (``_shingles_sized``),
+    carries its doc's distinct-shingle count map-side (``shingles_sized``),
     the pair groupBy keys on (doc_a, doc_b, n_sh_a, n_sh_b), and the old
     ``sizes`` groupBy + two shuffle joins of the pair frame against it are
     gone. The self-join's two sides share one shingle-partitioned exchange
@@ -337,11 +336,9 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded frame. Output bit-identical.
     """
     d = T.load(spark, sf_dir, "documents")
-    from .llm_scale_queries import _shingles_sized
-
     # no user repartition on the posting shuffle — it would disable AQE
     # skew-join splitting on hot shingles (see the jaccard twin's comment)
-    sh = _shingles_sized(d)
+    sh = shingles_sized(d)
     # fact-fact self-join: shuffle_hash pin, same reasoning as the jaccard
     # twin (Catalyst would broadcast the corpus-sized posting list at small
     # SF once the checkpoint no longer hides the scan stats).
@@ -390,7 +387,7 @@ def _bloom_hx(i: int, key: str, strtype: str = "VARCHAR") -> str:
 
 def _bloom_pos(hx_col: str, fn: str) -> str:
     """Bit position from a precomputed md5 hex column."""
-    return "(" + _hexval_sql(hx_col, fn) + " % " + str(BLOOM_M) + ")"
+    return "(" + hexval_sql(hx_col, fn) + " % " + str(BLOOM_M) + ")"
 
 
 _ORACLE_KEY_POS = " UNION ALL ".join(
@@ -529,9 +526,6 @@ def f_bloom_prefilter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # PIVOT — wide per-day event-type matrix (explicit value list, one pass).
 # ---------------------------------------------------------------------------
-_EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
 @query(
     "f_pivot_event_day",
     oracle="""
@@ -541,7 +535,7 @@ SELECT strftime(ts, '%Y-%m-%d') AS day,
         f"CAST(COUNT(CASE WHEN event_type = '{t}' THEN 1 END) AS BIGINT) AS {t}_ct,\n"
         f"       CAST(COALESCE(SUM(CASE WHEN event_type = '{t}' "
         f"THEN CAST(value AS DECIMAL(18,2)) END), 0) AS DOUBLE) AS {t}_val"
-        for t in _EVENT_TYPES
+        for t in EVENT_TYPES
     )
     + """
 FROM events GROUP BY 1
@@ -561,7 +555,7 @@ def f_pivot_event_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T.load(spark, sf_dir, "events", spread=False)
     p = (
         e.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-        .pivot("event_type", list(_EVENT_TYPES))
+        .pivot("event_type", list(EVENT_TYPES))
         .agg(
             F.count(F.lit(1)).alias("ct"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("val"),
@@ -571,7 +565,7 @@ def f_pivot_event_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         *[
             c
-            for t in _EVENT_TYPES
+            for t in EVENT_TYPES
             for c in (
                 F.coalesce(F.col(f"{t}_ct"), F.lit(0))
                 .cast("bigint")
@@ -647,9 +641,6 @@ def f_window_suite_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # existing ROLLUP (llm_corpus_rollup): CUBE also emits the per-day-all-types
 # marginals a rollup skips.
 # ---------------------------------------------------------------------------
-from .llm_scale_queries import _KMV_M  # noqa: E402  (shared random-oracle modulus)
-
-
 @query(
     "dws_cube_event_stats",
     oracle="""
@@ -708,12 +699,12 @@ SPLIT_VAL_PM = 950  # [900,950) -> val; rest -> test
     oracle=f"""
 WITH h AS (
     SELECT lang, text,
-           {_hexval_sql("md5(CAST(doc_id AS VARCHAR) || ':split')", "strpos")} AS u
+           {hexval_sql("md5(CAST(doc_id AS VARCHAR) || ':split')", "strpos")} AS u
     FROM documents
 ), s AS (
     SELECT lang, text,
-           CASE WHEN u * 1000 < {SPLIT_TRAIN_PM} * {_KMV_M} THEN 'train'
-                WHEN u * 1000 < {SPLIT_VAL_PM} * {_KMV_M} THEN 'val'
+           CASE WHEN u * 1000 < {SPLIT_TRAIN_PM} * {KMV_M} THEN 'train'
+                WHEN u * 1000 < {SPLIT_VAL_PM} * {KMV_M} THEN 'val'
                 ELSE 'test' END AS split
     FROM h
 )
@@ -739,10 +730,10 @@ def llm_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "text",
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split"))).alias("hx"),
-    ).withColumn("u", F.expr(_hexval_sql("hx", "instr")))
+    ).withColumn("u", F.expr(hexval_sql("hx", "instr")))
     split = (
-        F.when(F.col("u") * 1000 < SPLIT_TRAIN_PM * F.lit(_KMV_M), "train")
-        .when(F.col("u") * 1000 < SPLIT_VAL_PM * F.lit(_KMV_M), "val")
+        F.when(F.col("u") * 1000 < SPLIT_TRAIN_PM * F.lit(KMV_M), "train")
+        .when(F.col("u") * 1000 < SPLIT_VAL_PM * F.lit(KMV_M), "val")
         .otherwise("test")
     )
     return (
@@ -807,6 +798,7 @@ def llm_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the corpus is pruned to candidate docs before shingling.
 # ---------------------------------------------------------------------------
 def _containment_lsh_oracle() -> str:
+    from . import llm_scale_queries  # noqa: F401  (registers the minhash query)
     from .catalog import REGISTRY
 
     minhash = REGISTRY["llm_dedup_minhash_lsh"].oracle
@@ -881,8 +873,6 @@ def containment_lsh(
     checkpointing hides from explain(). The candidate-PAIR frame is always
     lineage-cut regardless — ``minhash_candidates`` checkpoints it
     internally (r12)."""
-    from .llm_scale_queries import _shingles, minhash_candidates
-
     def _persist(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True) if persist else df
 
@@ -900,7 +890,7 @@ def containment_lsh(
     # computing the scores only to drop them here was pure waste
     # (measured sf0.1: the verify phase was ~40% of this query's wall).
     cand = minhash_candidates(
-        _shingles(T.load(spark, sf_dir, "documents"))
+        shingles(T.load(spark, sf_dir, "documents"))
     ).select("doc_a", "doc_b")
     cd = (
         cand.select(F.col("doc_a").alias("doc_id"))
@@ -908,7 +898,7 @@ def containment_lsh(
         .distinct()
     )
     d = T.load(spark, sf_dir, "documents").join(F.broadcast(cd), "doc_id", "left_semi")
-    sh = _shingles(d)
+    sh = shingles(d)
     # the shingle frame also fans out (sizes + both sides of the
     # intersection join); it is candidate-pruned — proportional to the
     # LSH candidate set, not the corpus — so materializing it caps the
@@ -1442,8 +1432,6 @@ def dup_span_coverage(d: DataFrame) -> DataFrame:
 # Embedding covariance sufficient statistics — the PCA/whitening prep step:
 # the upper-triangle Gram matrix + per-dim sums as ONE mergeable aggregate.
 # ---------------------------------------------------------------------------
-from .llm_queries import VEC_DEC  # noqa: E402  (shared decimal ladder)
-
 _COV_E9 = "CAST(floor(1000000000.0 * CAST({} AS DOUBLE)) AS BIGINT)"
 
 
@@ -1495,9 +1483,7 @@ def llm_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (4,160 BigDecimal constructions per row), which dominated the whole
     # query (2.7x measured at x10). Same decimal values, so the sums and
     # the oracle hash are bit-identical.
-    from .llm_queries import _qdec
-
-    qd = emb.select(_qdec(F.col("embedding")).alias("q"))
+    qd = emb.select(qdec(F.col("embedding")).alias("q"))
     qcol = F.col("q")
     pair_terms = F.flatten(
         F.transform(

@@ -15,8 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from .. import tables as T
 from .catalog import query
 
-AGG = "decimal(38,6)"
-
 
 def _bucket(col: str, secs: int, plus: int = 0) -> str:
     """DuckDB SQL for the start/end of `col`'s `secs`-second tumbling window

@@ -38,9 +38,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import tables as T
+from ..operators.text import HEX
 from .catalog import query
-
-_HEX = "0123456789abcdef"
 
 DECODE_SCHEMA = (
     "doc_id bigint, media_type string, byte_len bigint, content_md5 string,"
@@ -66,7 +65,7 @@ def media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     ih = (
         F.lit(16)
         + (
-            F.expr(f"instr('{_HEX}', substr(md5(encode(text, 'utf-8')), 1, 1))")
+            F.expr(f"instr('{HEX}', substr(md5(encode(text, 'utf-8')), 1, 1))")
             - 1
         )
         * 4
@@ -268,7 +267,7 @@ def _decode_fake(payload: bytes, media_type: str) -> dict:
         "byte_len": n,
         "content_md5": md5,
         "width": 16 + n % 64,
-        "height": 16 + _HEX.index(md5[0]) * 4,
+        "height": 16 + HEX.index(md5[0]) * 4,
         "n_frames": 1 + n % 4 if media_type == "video" else 1,
     }
 
@@ -337,7 +336,7 @@ m AS (
                 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video'
            END AS media_type,
            16 + octet_length(encode(text)) % 64 AS iw,
-           16 + (strpos('{_HEX}', substr(md5(text), 1, 1)) - 1) * 4 AS ih
+           16 + (strpos('{HEX}', substr(md5(text), 1, 1)) - 1) * 4 AS ih
     FROM documents
 ), p AS (
     -- image rows are a real PPM container: ASCII header + text as pixels
@@ -355,7 +354,7 @@ m AS (
            CASE WHEN media_type = 'image' THEN iw
                 ELSE 16 + octet_length(encode(payload)) % 64 END AS width,
            CASE WHEN media_type = 'image' THEN ih
-                ELSE 16 + (strpos('{_HEX}', substr(md5(payload), 1, 1)) - 1) * 4
+                ELSE 16 + (strpos('{HEX}', substr(md5(payload), 1, 1)) - 1) * 4
            END AS height,
            CASE WHEN media_type = 'video'
                 THEN 1 + octet_length(encode(payload)) % 4 ELSE 1 END
@@ -465,7 +464,7 @@ def pixel_stats(media: DataFrame) -> DataFrame:
 WITH m AS (
     SELECT doc_id, text,
            16 + octet_length(encode(text)) % 64 AS iw,
-           16 + (strpos('{_HEX}', substr(md5(text), 1, 1)) - 1) * 4 AS ih
+           16 + (strpos('{HEX}', substr(md5(text), 1, 1)) - 1) * 4 AS ih
     FROM documents WHERE CAST(doc_id % 3 AS INT) = 0
 )
 SELECT doc_id,
@@ -676,7 +675,7 @@ def audio_stats(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fn, schema=AUDIO_SCHEMA)
 
 
-def _fixed_ppm_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+def fixed_ppm_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-row subset as FIXED-GEOMETRY 8x6 P6 containers whose plane is
     exactly w*h*3 bytes (text rpad-ed/truncated to 144) — the shape the
     resize kernel requires (``len(plane) == w*h*3``), built with JVM-side
@@ -737,7 +736,7 @@ def llm_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     container, proving the kernel reproduced the exact plane bytes. Both
     variants are map-only mapInPandas over the same scan; the union is
     two passes over a 144-byte-plane frame — no shuffle at any scale."""
-    imgs = _fixed_ppm_frame(spark, sf_dir)
+    imgs = fixed_ppm_frame(spark, sf_dir)
     ident = resize_image(imgs, 8, 6).withColumn("variant", F.lit("identity"))
     half = resize_image(imgs, 4, 3).withColumn("variant", F.lit("half"))
     u = ident.unionByName(half)

@@ -12,14 +12,21 @@ exact integer arithmetic at every boundary, identical aliases both sides.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
+from ..operators.text import (
+    KMV_M,
+    hexval_sql,
+    is_trigram,
+    minhash_candidates,
+    shingles,
+    trigrams,
+)
+from ..operators.topk import two_phase_topk
+from ..operators.vectors import VEC_ACC, qdec
 from .catalog import query
-from .llm_scale_queries import _KMV_M, _hexval_sql
 
 # ---------------------------------------------------------------------------
 # Stratified (per-language) corpus sampling — deterministic domain mixing.
@@ -39,18 +46,18 @@ _RATE_CASE = (
     oracle=f"""
 WITH h AS (
     SELECT source, lang, text,
-           {_hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")} AS u,
+           {hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")} AS u,
            {_RATE_CASE} AS rate_pm
     FROM documents
 )
 SELECT source, lang,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN u * 1000 < rate_pm * {_KMV_M} THEN 1 ELSE 0 END)
+       CAST(SUM(CASE WHEN u * 1000 < rate_pm * {KMV_M} THEN 1 ELSE 0 END)
             AS BIGINT) AS n_kept,
-       CAST(COALESCE(SUM(CASE WHEN u * 1000 < rate_pm * {_KMV_M}
+       CAST(COALESCE(SUM(CASE WHEN u * 1000 < rate_pm * {KMV_M}
                               THEN len(string_split(text, ' ')) END), 0)
             AS BIGINT) AS kept_tokens,
-       CAST((1000 * SUM(CASE WHEN u * 1000 < rate_pm * {_KMV_M}
+       CAST((1000 * SUM(CASE WHEN u * 1000 < rate_pm * {KMV_M}
                              THEN 1 ELSE 0 END)) // COUNT(*)
             AS BIGINT) AS realized_pm
 FROM h GROUP BY 1, 2
@@ -75,8 +82,8 @@ def llm_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.md5(F.col("doc_id").cast("string")).alias("hx"),
         F.expr(_RATE_CASE).alias("rate_pm"),
-    ).withColumn("u", F.expr(_hexval_sql("hx", "instr")))
-    kept = F.col("u") * 1000 < F.col("rate_pm") * F.lit(_KMV_M)
+    ).withColumn("u", F.expr(hexval_sql("hx", "instr")))
+    kept = F.col("u") * 1000 < F.col("rate_pm") * F.lit(KMV_M)
     return h.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(kept, 1).otherwise(0)).cast("bigint").alias("n_kept"),
@@ -87,7 +94,7 @@ def llm_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("kept_tokens"),
         F.expr(
             "cast((1000 * sum(case when u * 1000 < rate_pm * "
-            f"{_KMV_M} then 1 else 0 end)) div count(1) as bigint)"
+            f"{KMV_M} then 1 else 0 end)) div count(1) as bigint)"
         ).alias("realized_pm"),
     )
 
@@ -188,11 +195,6 @@ DECON_EVAL_MOD = 97  # doc_id % MOD == 0 plays the held-out benchmark set
 DECON_MIN_SHARED = 5  # shared distinct 3-grams to flag contamination
 
 
-# one canonical shingle construction for the whole dedup family — a fix
-# to tokenization or the n<3 guard must land in exactly one place
-from .llm_scale_queries import _shingles  # noqa: E402,F401
-
-
 @query(
     "llm_decontaminate",
     oracle=f"""
@@ -230,7 +232,7 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the big side. Distinct-per-doc bounds stop-shingle skew exactly as
     in llm_dedup_ngram_jaccard.
     """
-    sh = _shingles(T.load(spark, sf_dir, "documents"))
+    sh = shingles(T.load(spark, sf_dir, "documents"))
     ev = (
         sh.filter(F.col("doc_id") % DECON_EVAL_MOD == 0)
         .select(F.col("doc_id").alias("eval_id"), "shingle")
@@ -372,18 +374,7 @@ def llm_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = T.load(spark, sf_dir, "documents")
     t = F.split("text", " ")
-    sh_arr = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(t) - 3, F.lit(0))),
-            lambda i: F.concat_ws(
-                " ",
-                F.try_element_at(t, i + 1),
-                F.try_element_at(t, i + 2),
-                F.try_element_at(t, i + 3),
-            ),
-        ),
-        lambda s: F.size(F.split(s, " ")) == 3,
-    )
+    sh_arr = F.filter(trigrams(t), is_trigram)
     out = d.select(
         "doc_id",
         F.size(sh_arr).cast("bigint").alias("total_ngrams"),
@@ -445,8 +436,8 @@ WITH feat AS (
       AND d.doc_id NOT IN (SELECT doc_id FROM contaminated)
 ), sampled AS (
     SELECT lang, n_tokens FROM clean
-    WHERE ({_hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")}) * 1000
-          < ({_RATE_CASE}) * {_KMV_M}
+    WHERE ({hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")}) * 1000
+          < ({_RATE_CASE}) * {KMV_M}
 )
 SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -517,7 +508,7 @@ def corpus_final_shingle_partials(d: DataFrame) -> DataFrame:
     training doc may share shingles with an eval doc from a different
     batch) and therefore computed only at finalize — the same membership
     discipline as lsh_curve_shingle_partials."""
-    return _shingles(d)
+    return shingles(d)
 
 
 def corpus_final_finalize(kept: DataFrame, sh: DataFrame) -> DataFrame:
@@ -544,8 +535,8 @@ def corpus_final_finalize(kept: DataFrame, sh: DataFrame) -> DataFrame:
     sampled = clean.withColumn(
         "hx", F.md5(F.col("doc_id").cast("string"))
     ).filter(
-        F.expr(_hexval_sql("hx", "instr")) * 1000
-        < F.expr(_RATE_CASE) * F.lit(_KMV_M)
+        F.expr(hexval_sql("hx", "instr")) * 1000
+        < F.expr(_RATE_CASE) * F.lit(KMV_M)
     )
     return sampled.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -579,17 +570,12 @@ _PQ_DIFF = (
 ).format(d=PQ_D)
 
 
-from .llm_queries import _qdec  # noqa: E402  (shared quantize-once ladder)
-
-
 def _sqdist_q(a, b):
-    """Exact-decimal squared L2 over two ALREADY-``_qdec``-quantized
+    """Exact-decimal squared L2 over two ALREADY-``qdec``-quantized
     arrays: one subtract + one multiply per element. An inline-quantizing
     form would evaluate four double->BigDecimal casts and two subtracts
     per element PER PAIR — quantize once per side-row instead (the
     decimal expression values are identical either way)."""
-    from .llm_queries import VEC_ACC
-
     return F.aggregate(
         F.transform(F.zip_with(a, b, lambda x, y: x - y), lambda d: d * d),
         F.lit(0).cast(VEC_ACC),
@@ -612,7 +598,7 @@ def _pq_assign(emb: DataFrame) -> DataFrame:
     on cid via one row_number window. ``svq`` (the quantized subvector)
     rides along for the training consumer; encode-only paths drop it and
     column pruning removes it below the window."""
-    sub = _pq_subvectors(emb).withColumn("svq", _qdec(F.col("sv")))
+    sub = _pq_subvectors(emb).withColumn("svq", qdec(F.col("sv")))
     cb = sub.filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("cid"), "m", F.col("svq").alias("cvq")
     )
@@ -994,35 +980,13 @@ def ivfpq_residual_frame(emb: DataFrame) -> DataFrame:
     return _ivfpq_residuals(subint, cassign, _ivfpq_ccb(subint))
 
 
-# Phase-1 slices per qid (two-phase exact top-k) — same retune + rationale
-# as llm_queries.ANN_TOPK_SALT (r13): 8 bounds the local second-window
-# overhead, still lifts the NQ-way ceiling to NQ*8; identical output for
-# any salt (shared total order), production raises via env to ~cores/NQ.
-TOPK_SALT = int(os.environ.get("SPARK_GRAFT_TOPK_SALT", "8"))
-
-
 def _topk_per_qid(scored: DataFrame, ordcol: str) -> DataFrame:
-    """Exact (ordcol, vec_id)-ordered top-ADC_TOPK per qid, TWO-PHASE
-    (the llm_sample_reservoir pattern, r12): a single
-    Window.partitionBy(qid) caps the ranking stage at NQ(=8)-way
-    parallelism — at x100 that is one task sorting ~1.5-6M scored rows
-    per query id, and on a 1000-executor cluster the stage would idle
-    all but NQ cores. Phase 1 ranks within (qid, vec_id % SALT) slices
-    (NQ x SALT-way parallel, each slice's top-k is a superset filter of
-    the global top-k restricted to it); phase 2 ranks the <= SALT*k
-    survivors. Both phases use the SAME total order, so the result is
-    identical to the single window (oracle unchanged)."""
-    w1 = Window.partitionBy("qid", F.expr(f"vec_id % {TOPK_SALT}")).orderBy(
-        ordcol, "vec_id"
-    )
-    w2 = Window.partitionBy("qid").orderBy(ordcol, "vec_id")
-    return (
-        scored.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= ADC_TOPK)
-        .withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= ADC_TOPK)
-        .select("qid", "vec_id")
-    )
+    """Exact (ordcol, vec_id)-ordered top-ADC_TOPK (qid, vec_id) rows — the
+    two-phase rank of operators.topk: a single Window.partitionBy(qid)
+    would cap the ranking stage at NQ(=8)-way parallelism."""
+    return two_phase_topk(
+        scored, ["qid"], "vec_id", [ordcol, "vec_id"], ADC_TOPK
+    ).select("qid", "vec_id")
 
 
 def _adc_topk(
@@ -1206,11 +1170,11 @@ def llm_ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     # -- exact ground truth + assembly ----------------------------------
     q = emb.filter(F.col("vec_id") < ADC_NQ).select(
-        F.col("vec_id").alias("qid"), _qdec(F.col("embedding")).alias("qeq")
+        F.col("vec_id").alias("qid"), qdec(F.col("embedding")).alias("qeq")
     )
     # base side quantized once per ROW (not once per of the NQ pairs)
     ex = (
-        emb.select("vec_id", _qdec(F.col("embedding")).alias("eq"))
+        emb.select("vec_id", qdec(F.col("embedding")).alias("eq"))
         .crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
@@ -1277,6 +1241,7 @@ EDIT_DUP_PM = 200  # normalized edit distance <= 20% -> duplicate
 
 
 def _edit_verify_oracle() -> str:
+    from . import llm_scale_queries  # noqa: F401  (registers the minhash query)
     from .catalog import REGISTRY
 
     minhash = REGISTRY["llm_dedup_minhash_lsh"].oracle
@@ -1321,14 +1286,12 @@ def llm_dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFram
     — the distance is the byte-level edit distance everywhere, identical
     on ASCII and well-defined on any text.
     """
-    from .llm_scale_queries import _shingles, minhash_candidates
-
     # r12 optimization: only the candidate PAIR SET feeds the edit-distance
     # scorer, and the minhash verify never filters a pair — stop at the
     # band self-join (see minhash_candidates) instead of computing exact
     # Jaccard scores that are immediately dropped.
     cand = minhash_candidates(
-        _shingles(T.load(spark, sf_dir, "documents"))
+        shingles(T.load(spark, sf_dir, "documents"))
     ).select("doc_a", "doc_b")
     d = T.load(spark, sf_dir, "documents").select(
         "doc_id",

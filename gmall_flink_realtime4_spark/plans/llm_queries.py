@@ -10,26 +10,17 @@ exact. The non-SQL-expressible variants (MinHash-LSH, SimHash) live in
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from .. import tables as T
+from ..operators.text import shingles_sized
+from ..operators.topk import two_phase_topk
+from ..operators.vectors import cos_e9, dot, dot_q, qdec
 from .catalog import query
 
 STOPWORDS = ("the", "a", "of", "to", "and")
 _STOP_SQL = "('the', 'a', 'of', 'to', 'and')"
-
-# embedding components are < 1 in magnitude (normalized-ish vectors). Cast
-# float -> DOUBLE first (Spark's float->decimal goes through the FLOAT's
-# shortest decimal repr; DuckDB uses the exact binary value — double-first
-# makes both engines see the same value), then DECIMAL(9,7): products stay
-# within (19,14), 64-element sums within (38,14) and the scaled integer sum
-# stays under 2^53 so decimal->double is one exactly-rounded step. Exact,
-# order-independent arithmetic on both engines.
-VEC_DEC = "decimal(9,7)"
-VEC_ACC = "decimal(38,14)"
 
 
 # ---------------------------------------------------------------------------
@@ -98,7 +89,7 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join; common-shingle skew is bounded by per-doc distinct.
 
     Round 9 plan: each posting row carries its doc's distinct-shingle count
-    (``_shingles_sized`` — computed map-side in the projection that builds
+    (``shingles_sized`` — computed map-side in the projection that builds
     the array), so the pair groupBy keys on (doc_a, doc_b, na, nb) and the
     Jaccard denominator is in hand the moment inter_ct is — the old plan's
     ``sizes`` groupBy plus TWO shuffle joins of the pair frame (the largest
@@ -110,8 +101,6 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpoint paid, with exchange reuse it is a pure extra write).
     Output bit-identical: same candidate pairs, same exact-integer scores.
     """
-    from .llm_scale_queries import _shingles_sized
-
     d = T.load(spark, sf_dir, "documents")
     # NO user repartition on the posting shuffle, deliberately: an
     # explicit repartition(width, "shingle") exempts the exchange from
@@ -120,9 +109,9 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # skew-join splitting, and hot shingles are the real hazard at
     # scale (measured x30: 17.9 s with the pin vs ~11 s letting AQE
     # skew-split). ENSURE_REQUIREMENTS + AQE is the right trade at
-    # every scale once the derivation itself is cheap (_shingles_sized
+    # every scale once the derivation itself is cheap (shingles_sized
     # shape note).
-    sh = _shingles_sized(d)
+    sh = shingles_sized(d)
     # fact-fact self-join: pin shuffle_hash (the repo's r7 rule) — with a
     # real scan lineage Catalyst would BROADCAST the corpus-sized posting
     # list at small SF (the old checkpoint only hid the stats), which dies
@@ -159,93 +148,6 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Brute-force cosine top-k ANN — the exact baseline the IVF/LSH variants are
 # judged against. Decimal-exact dot products; score scaled to BIGINT.
 # ---------------------------------------------------------------------------
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: x.cast("double").cast(VEC_DEC)
-            * y.cast("double").cast(VEC_DEC),
-        ),
-        F.lit(0).cast(VEC_ACC),
-        lambda acc, x: (acc + x).cast(VEC_ACC),
-    )
-
-
-def _dec7(x):
-    """The shared element quantization ladder: double -> DECIMAL(9,7)."""
-    return x.cast("double").cast(VEC_DEC)
-
-
-def _qdec(arr):
-    """Quantize a float array ONCE into the shared decimal ladder —
-    pair-scoring sites attach this per SIDE-ROW so the expensive
-    double->BigDecimal casts run once per vector, not once per pair.
-    The ONE copy of the quantization (pipeline/corpus modules import it):
-    a second copy could silently diverge from VEC_DEC and break the
-    bit-identical-to-oracle guarantee."""
-    return F.transform(arr, _dec7)
-
-
-def _dot_q(a, b):
-    """``_dot`` over two ALREADY-``_qdec``-quantized arrays: one multiply
-    + one accumulate per element (the inline form re-casts both operands
-    double->BigDecimal per element, per pair). Identical decimal values —
-    only the redundant re-quantization is hoisted to once per side-row."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast(VEC_ACC),
-        lambda acc, x: (acc + x).cast(VEC_ACC),
-    )
-
-
-def _dot_dbl(a, b):
-    """Plain-double twin of the exact-decimal ``_dot`` — the cheap
-    PRE-SCORE for prerank/prefilter passes: no BigDecimal allocation per
-    element, so it is ~10-30x faster through the interpreted higher-order
-    fold. Never emitted: every surviving row is re-scored with ``_dot``
-    before any output or ranking decision (see ``PRESCORE_MARGIN_E9``)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-# |cos_e9(decimal) - cos_e9(double)| bound: DECIMAL(9,7) quantization
-# perturbs each element by <= 5e-8, so a D-dim dot moves by
-# <= D * (2*max|x|*5e-8) ~ 6.4e-6 for D=64, |x| <= 1 — i.e. <= ~6.4e3
-# e9-units for unit-norm vectors (double fold rounding is 1e-7 e9-units,
-# negligible). When the pre-score also uses DOUBLE norms (all-double
-# stage 1), the norm quantization adds another <= ~1.3e-5 relative —
-# total <= ~2e4 e9-units. 1e7 (0.01 cosine) is still a ~500x safety
-# factor; candidates inside the margin are decimal-rescored, so the
-# margin only affects COST (a slightly larger rescore set), never
-# correctness.
-PRESCORE_MARGIN_E9 = 10_000_000
-
-
-def _cos_e9(dot, n2a, n2b):
-    """e9-scaled cosine from a dot product and the two squared norms.
-
-    nullif-guards the norm product: a zero-norm vector would otherwise
-    raise DIVIDE_BY_ZERO under Spark 4's default ANSI mode, while the
-    DuckDB oracle yields NULL and drops the row at the threshold filter —
-    NULL here reproduces the oracle's behavior on both engines. The ONE
-    copy of this expression (llm_scale_queries imports it): a divergence
-    between two copies would surface as a data-dependent engine-vs-oracle
-    mismatch."""
-    return (
-        F.floor(
-            F.lit(1000000000.0)
-            * dot.cast("double")
-            / F.nullif(
-                F.sqrt(n2a.cast("double") * n2b.cast("double")), F.lit(0.0)
-            )
-        ).cast("bigint")
-    )
-
-
 @query(
     "llm_ann_cosine_topk",
     oracle="""
@@ -315,13 +217,13 @@ def llm_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") < 8
     ).select(
         F.col("vec_id").alias("query_vec_id"),
-        _qdec(F.col("embedding")).alias("qeq"),
-        _dot(F.col("embedding"), F.col("embedding")).alias("qn2"),
+        qdec(F.col("embedding")).alias("qeq"),
+        dot(F.col("embedding"), F.col("embedding")).alias("qn2"),
     )
     base = emb.select(
         F.col("vec_id").alias("neighbor_vec_id"),
-        _qdec(F.col("embedding")).alias("neq"),
-        _dot(F.col("embedding"), F.col("embedding")).alias("nn2"),
+        qdec(F.col("embedding")).alias("neq"),
+        dot(F.col("embedding"), F.col("embedding")).alias("nn2"),
     )
     scored = (
         F.broadcast(q)
@@ -329,55 +231,22 @@ def llm_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_vec_id",
             "neighbor_vec_id",
-            _cos_e9(
-                _dot_q(F.col("qeq"), F.col("neq")),
+            cos_e9(
+                dot_q(F.col("qeq"), F.col("neq")),
                 F.col("qn2"),
                 F.col("nn2"),
             ).alias("cos_sim_e9"),
         )
     )
-    return _ranked_topk_per_query(scored, 5).select(
-        "query_vec_id", "neighbor_vec_id", "rank", "cos_sim_e9"
-    )
-
-
-# Phase-1 slices per query (two-phase exact top-k). r13 retune (r12
-# verdict item 2): 8 bounds the small-scale overhead of the second window
-# phase — min-of-6 interleaved A/B at sf0.1 read SALT=8 flat-to-better on
-# all five consumers (cosine −7.4%, ivf −3.7%, tuning −4.3%) — while still
-# removing the NQ(=8)-way ranking ceiling (8 -> 64-way). The output is
-# bit-identical for ANY salt (both phases share one total order; property
-# test pins it), so production can raise it via env to ~cores/NQ without
-# re-proving the oracle.
-ANN_TOPK_SALT = int(os.environ.get("SPARK_GRAFT_TOPK_SALT", "8"))
-
-
-def _ranked_topk_per_query(scored: DataFrame, k: int) -> DataFrame:
-    """Two-phase EXACT ranked top-k per query over a
-    (query_vec_id, neighbor_vec_id, cos_sim_e9) frame — r12, shared by
-    the cosine baseline and both IVF rerank stages.
-
-    A single Window.partitionBy(query_vec_id) caps the ranking stage at
-    N_QUERIES(=8)-way parallelism regardless of cluster size — one task
-    sorts the whole candidate set of a query (the full corpus for the
-    brute-force baseline). Phase 1 ranks within
-    (query, neighbor % SALT) slices — 8 x SALT-way parallel; every
-    global top-k row is in its slice's top-k by the same total order —
-    phase 2 assigns the FINAL rank over the <= SALT*k survivors.
-    Identical (rank, score) output to the single window (ties broken by
-    neighbor id in both phases), so the oracles are unchanged."""
-    order = [F.col("cos_sim_e9").desc(), F.col("neighbor_vec_id")]
-    w1 = Window.partitionBy(
-        "query_vec_id", F.expr(f"neighbor_vec_id % {ANN_TOPK_SALT}")
-    ).orderBy(*order)
-    w2 = Window.partitionBy("query_vec_id").orderBy(*order)
-    return (
-        scored.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_r1")
-        .withColumn("rank", F.row_number().over(w2).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    # two-phase exact ranked top-k (r12): a single query_vec_id window
+    # would rank the whole corpus 8-way-parallel at any cluster size
+    return two_phase_topk(
+        scored,
+        ["query_vec_id"],
+        "neighbor_vec_id",
+        [F.col("cos_sim_e9").desc(), F.col("neighbor_vec_id")],
+        5,
+    ).select("query_vec_id", "neighbor_vec_id", "rank", "cos_sim_e9")
 
 
 # ---------------------------------------------------------------------------
@@ -466,7 +335,7 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _hits_sql(langtoks: tuple[str, ...]) -> str:
+def hits_sql(langtoks: tuple[str, ...]) -> str:
     inlist = ", ".join(f"'{t}'" for t in langtoks)
     return f"len(list_filter(string_split(text, ' '), x -> x IN ({inlist})))"
 
@@ -476,10 +345,10 @@ def _hits_sql(langtoks: tuple[str, ...]) -> str:
     oracle=f"""
 WITH h AS (
     SELECT doc_id, lang AS labeled_lang,
-           {_hits_sql(LANG_STOPWORDS['en'])} AS en_hits,
-           {_hits_sql(LANG_STOPWORDS['fr'])} AS fr_hits,
-           {_hits_sql(LANG_STOPWORDS['es'])} AS es_hits,
-           {_hits_sql(LANG_STOPWORDS['de'])} AS de_hits
+           {hits_sql(LANG_STOPWORDS['en'])} AS en_hits,
+           {hits_sql(LANG_STOPWORDS['fr'])} AS fr_hits,
+           {hits_sql(LANG_STOPWORDS['es'])} AS es_hits,
+           {hits_sql(LANG_STOPWORDS['de'])} AS de_hits
     FROM documents
 )
 SELECT doc_id, labeled_lang, en_hits, fr_hits, es_hits, de_hits,

@@ -13,7 +13,7 @@ pair space never materializes at 100 TB:
 
 Determinism: every hash is md5 (identical hex both engines); minhash "min"
 is lexicographic min over fixed-width hex (== numeric min); cosine uses the
-decimal-exact dot from llm_queries scaled to BIGINT. All hot-path
+decimal-exact dot from operators.vectors scaled to BIGINT. All hot-path
 expressions are JVM-side (whole-stage codegen) — no Python UDFs.
 """
 
@@ -23,114 +23,31 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from .. import tables as T
-from .catalog import REGISTRY, query
-from .llm_queries import (
+from ..operators.text import (
+    HEX,
+    KMV_M,
+    MINHASH_B,
+    MINHASH_K,
+    MINHASH_R,
+    SHINGLE_SQL,
+    hexval_sql,
+    minhash_candidates,
+    minhash_verify,
+    shingles,
+)
+from ..operators.topk import two_phase_topk
+from ..operators.vectors import (
     PRESCORE_MARGIN_E9,
     VEC_ACC,
     VEC_DEC,
-    _cos_e9,
-    _dot,
-    _dot_dbl,
-    _dot_q,
-    _qdec,
-    _ranked_topk_per_query,
-    llm_ann_cosine_topk,
+    cos_e9,
+    dot,
+    dot_dbl,
+    dot_q,
+    qdec,
 )
-
-# MinHash parameters: K hash functions in B bands of R rows (K = B*R).
-MINHASH_K, MINHASH_B, MINHASH_R = 12, 4, 3
-
-_SHINGLE_SQL = """
-toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), sh AS (
-    SELECT DISTINCT doc_id,
-           t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM idx
-)"""
-
-
-def _shingles(d: DataFrame) -> DataFrame:
-    """Distinct 3-word shingles per doc (same construction as the
-    ngram-jaccard query so the two ops share one candidate space)."""
-    toks = d.select("doc_id", F.split("text", " ").alias("t"))
-    return (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), F.greatest(F.size("t") - 3, F.lit(0))),
-                        lambda i: F.concat_ws(
-                            " ",
-                            F.try_element_at(F.col("t"), i + 1),
-                            F.try_element_at(F.col("t"), i + 2),
-                            F.try_element_at(F.col("t"), i + 3),
-                        ),
-                    )
-                )
-            ).alias("shingle"),
-        )
-        .filter(F.size(F.split("shingle", " ")) == 3)
-    )
-
-
-def _shingles_sized(d: DataFrame) -> DataFrame:
-    """``_shingles`` plus a MAP-SIDE per-doc distinct-shingle count:
-    (doc_id, n_sh BIGINT, shingle).
-
-    The exact pair-scoring queries (ngram-jaccard, containment) need each
-    side's set size next to every intersection row. Computing it here —
-    ``size()`` of the same distinct array the explode consumes, one narrow
-    projection, zero shuffles — lets those queries GROUP the pair join by
-    (doc_a, doc_b, n_a, n_b) directly and drop the whole ``sizes`` branch
-    they used to carry: a per-doc groupBy shuffle of the shingle frame plus
-    TWO shuffle joins of the pair frame (the largest intermediate in either
-    query) against it. n_sh is functionally determined by doc_id, so the
-    wider grouping key changes no groups; the 8-byte column rides a shuffle
-    that already carries the ~20-byte shingle string. Same construction as
-    ``_shingles``, so the candidate space is bit-identical.
-
-    SHAPE MATTERS (two measured dead ends, both row-identical):
-    (1) The array must be projected as a NAMED COLUMN in its own step so
-    it evaluates ONCE — putting ``size(arr_expr)`` and
-    ``explode(arr_expr)`` as siblings in one projection evaluates the
-    expression twice (Project and Generate are different operators, no
-    cross-operator CSE): hidden at sf0.1 (~0.6 s derivation) but ~2x the
-    whole query at x30. (2) The generator must be ``explode_outer``, not
-    ``explode`` — InferFiltersFromGenerate skips outer generators, while
-    plain explode over a named column made Catalyst infer a non-empty
-    filter and predicate-pushdown substitute the WHOLE array
-    construction below the loader's spread repartition onto the
-    single-task parquet scan (sf0.1: 3.8 s vs 0.65 s). outer == inner
-    here because the array is never empty (sequence(0, >=0) yields >= 1
-    index; degenerate short shingles from tiny docs are dropped by the
-    post-explode row filter, the same filter ``_shingles`` uses).
-    n_sh = size(arr) is exact for every SURVIVING row: docs with >= 3
-    tokens generate only valid 3-token shingles (the index sequence
-    stops at size-3), and shorter docs' rows are all dropped, so their
-    n_sh never surfaces.
-    """
-    toks = d.select("doc_id", F.split("text", " ").alias("t"))
-    arr = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size("t") - 3, F.lit(0))),
-            lambda i: F.concat_ws(
-                " ",
-                F.try_element_at(F.col("t"), i + 1),
-                F.try_element_at(F.col("t"), i + 2),
-                F.try_element_at(F.col("t"), i + 3),
-            ),
-        )
-    )
-    step = toks.select("doc_id", arr.alias("shs"))
-    return step.select(
-        "doc_id",
-        F.size("shs").cast("bigint").alias("n_sh"),
-        F.explode_outer("shs").alias("shingle"),
-    ).filter(F.size(F.split("shingle", " ")) == 3)
+from .catalog import REGISTRY, query
+from .llm_queries import llm_ann_cosine_topk
 
 
 def _minhash_oracle() -> str:
@@ -145,7 +62,7 @@ def _minhash_oracle() -> str:
         for j in range(MINHASH_B)
     )
     return f"""
-WITH {_SHINGLE_SQL},
+WITH {SHINGLE_SQL},
 mh AS (
     SELECT doc_id,
            {mins}
@@ -191,132 +108,14 @@ def llm_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width md5 hex == numeric min, identical in Spark and DuckDB.
     """
     d = T.load(spark, sf_dir, "documents")
-    sh = _shingles(d)
+    sh = shingles(d)
     cand = minhash_candidates(sh)
     return minhash_verify(cand, sh)
-
-
-def minhash_candidates(sh: DataFrame) -> DataFrame:
-    """Checkpointed LSH band-collision candidate pairs
-    (doc_a, doc_b, shared_bands) from a shingle frame.
-
-    Factored out of ``llm_dedup_minhash_lsh`` (r12 optimization) so
-    downstream scorers that only need the CANDIDATE PAIR SET —
-    ``llm_dedup_containment_lsh`` scores containment over exactly these
-    pairs — can stop at the band self-join instead of paying the full
-    minhash query's exact-Jaccard verify (intersection join + two size
-    joins + a second shingle derivation) just to throw the scores away.
-    The verify never filters a pair (its inter join is LEFT and the size
-    joins hit every candidate doc, which by construction has shingles),
-    so the pair set out of the full query is bit-identical to this one.
-    """
-    bands = minhash_bands(sh)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared_bands"))
-        # LSH-recall-sized (tiny vs corpus); feeds the verify join AND the
-        # final score join — materialize so the band self-join runs once.
-        .localCheckpoint()
-    )
-
-
-def minhash_bands(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) LSH band keys from a shingle frame — the
-    shared construction for the batch query and the streaming-incremental
-    twin (`streaming.incremental.incremental_minhash_pairs`).
-
-    One row per doc at the signature stage (K hex minhashes). The band
-    frame is typically self-joined, so without materialization the
-    shingle explode + K-way min-agg would run once per join SIDE and
-    once more per verify consumer — 8 documents scans in the r4 census.
-    Checkpointing the signatures caps the corpus at 2 scans."""
-    mh = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ]
-    ).localCheckpoint()
-    return mh.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.md5(
-                            F.concat(
-                                *[F.col(f"h{MINHASH_R * j + k}") for k in range(MINHASH_R)]
-                            )
-                        ).alias("bucket"),
-                    )
-                    for j in range(MINHASH_B)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-
-
-def minhash_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
-    """Exact-Jaccard verification of LSH candidate pairs against a
-    shingle frame; returns the final (doc_a, doc_b, shared_bands,
-    inter_ct, jaccard_permille) columns. Shared by the batch query and
-    the streaming-incremental twin.
-
-    The verify touches only candidate docs: semi-join prune the shingle
-    frame BEFORE the intersection join (same pattern as containment-LSH),
-    then materialize the pruned shingles — sizes and both intersection
-    sides read the pruned frame, so the corpus is never re-scanned."""
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_cand = sh.join(cand_ids, "doc_id", "left_semi").localCheckpoint()
-    sizes = sh_cand.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa, sb2 = sh_cand.alias("sa"), sh_cand.alias("sb")
-    inter = (
-        cand.select("doc_a", "doc_b")
-        .join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(
-            sb2,
-            (F.col("sb.doc_id") == F.col("doc_b"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter_ct"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    return (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "shared_bands",
-            F.coalesce("inter_ct", F.lit(0)).alias("inter_ct"),
-            F.expr(
-                "(1000 * coalesce(inter_ct, 0))"
-                " div (na + nb - coalesce(inter_ct, 0))"
-            ).alias("jaccard_permille"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
 # SimHash — 64-bit fingerprint from per-bit token votes.
 # ---------------------------------------------------------------------------
-_HEX = "0123456789abcdef"
-
-
 def _simhash_oracle() -> str:
     pivot = " || ".join(f"MAX(CASE WHEN p = {i} THEN c END)" for i in range(16))
     return f"""
@@ -327,7 +126,7 @@ WITH toks AS (
 ), pos AS (
     SELECT doc_id, h, unnest(range(0, 16)) AS p FROM h
 ), dig AS (
-    SELECT doc_id, p, strpos('{_HEX}', substr(h, CAST(p AS INT) + 1, 1)) - 1 AS v
+    SELECT doc_id, p, strpos('{HEX}', substr(h, CAST(p AS INT) + 1, 1)) - 1 AS v
     FROM pos
 ), bits AS (
     SELECT doc_id, p, unnest(range(0, 4)) AS b, v FROM dig
@@ -339,7 +138,7 @@ WITH toks AS (
     SELECT doc_id, p, SUM(CASE WHEN s > 0 THEN (1 << b) ELSE 0 END) AS dv
     FROM sums GROUP BY 1, 2
 ), chars AS (
-    SELECT doc_id, p, substr('{_HEX}', CAST(dv AS INT) + 1, 1) AS c FROM digit
+    SELECT doc_id, p, substr('{HEX}', CAST(dv AS INT) + 1, 1) AS c FROM digit
 )
 SELECT doc_id, {pivot} AS simhash64
 FROM chars GROUP BY doc_id
@@ -383,7 +182,7 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hv = h.select(
         "doc_id",
         *[
-            (F.expr(f"instr('{_HEX}', substring(h, {p + 1}, 1))") - 1).alias(f"v{p}")
+            (F.expr(f"instr('{HEX}', substring(h, {p + 1}, 1))") - 1).alias(f"v{p}")
             for p in range(16)
         ],
     )
@@ -420,7 +219,7 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     chars = [
-        F.expr(f"substring('{_HEX}', cast({_dv(p)} as int) + 1, 1)")
+        F.expr(f"substring('{HEX}', cast({_dv(p)} as int) + 1, 1)")
         for p in range(16)
     ]
     return sums.select("doc_id", F.concat(*chars).alias("simhash64"))
@@ -444,7 +243,7 @@ def _simhash_pairs_oracle() -> str:
     hamming = " + ".join(
         "CAST(substr('{pc}', xor(strpos('{hx}', substr(a.simhash64, {i}, 1)) - 1,"
         " strpos('{hx}', substr(b.simhash64, {i}, 1)) - 1) + 1, 1) AS INT)".format(
-            pc=_POPCOUNT, hx=_HEX, i=i + 1
+            pc=_POPCOUNT, hx=HEX, i=i + 1
         )
         for i in range(16)
     )
@@ -456,7 +255,7 @@ WITH toks AS (
 ), pos AS (
     SELECT doc_id, h, unnest(range(0, 16)) AS p FROM h
 ), dig AS (
-    SELECT doc_id, p, strpos('{_HEX}', substr(h, CAST(p AS INT) + 1, 1)) - 1 AS v
+    SELECT doc_id, p, strpos('{HEX}', substr(h, CAST(p AS INT) + 1, 1)) - 1 AS v
     FROM pos
 ), bits AS (
     SELECT doc_id, p, unnest(range(0, 4)) AS b, v FROM dig
@@ -468,7 +267,7 @@ WITH toks AS (
     SELECT doc_id, p, SUM(CASE WHEN s > 0 THEN (1 << b) ELSE 0 END) AS dv
     FROM sums GROUP BY 1, 2
 ), chars AS (
-    SELECT doc_id, p, substr('{_HEX}', CAST(dv AS INT) + 1, 1) AS c FROM digit
+    SELECT doc_id, p, substr('{HEX}', CAST(dv AS INT) + 1, 1) AS c FROM digit
 ), fp AS (
     SELECT doc_id, {pivot} AS simhash64 FROM chars GROUP BY doc_id
 ), blocks AS (
@@ -687,7 +486,7 @@ def llm_dedup_embedding_cosine(
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     if compress_exact:
         grouped = _group_identical(embn)
@@ -726,7 +525,7 @@ def llm_dedup_embedding_cosine(
             "vec_b",
             F.floor(
                 F.lit(1000000000.0)
-                * _dot(F.col("ea"), F.col("eb")).cast("double")
+                * dot(F.col("ea"), F.col("eb")).cast("double")
                 / F.nullif(
                     F.sqrt(
                         F.col("na2").cast("double") * F.col("nb2").cast("double")
@@ -864,7 +663,7 @@ def _within_group_pairs(grouped: DataFrame) -> DataFrame:
     return (
         grouped.filter(F.size("members") >= 2)
         .select(
-            _cos_e9(F.col("n2"), F.col("n2"), F.col("n2")).alias("cos_sim_e9"),
+            cos_e9(F.col("n2"), F.col("n2"), F.col("n2")).alias("cos_sim_e9"),
             F.explode("members").alias("vec_a"),
             F.col("members").alias("mb"),
         )
@@ -892,11 +691,11 @@ def _topcells(embn: DataFrame, cent: DataFrame, nprobe: int, dot=None) -> DataFr
     cluster wants.
 
     ``cent`` must expose (cid, ce, cn2); ``dot(embedding, ce)`` defaults to
-    the exact-decimal ``_dot``. Returns ``embn``'s rows plus ``_top``:
+    the exact-decimal ``dot``. Returns ``embn``'s rows plus ``_top``:
     array<struct<ce9, negcid>> of length <= nprobe (cell id = -negcid).
 
     Cost shape (default dot only): one in-row decimal pass over the K
-    cells, both sides quantized ONCE (``_qdec`` per row / per broadcast
+    cells, both sides quantized ONCE (``qdec`` per row / per broadcast
     build) so the fold is one multiply + accumulate per element. The r5
     double-prerank wrapper was reverted in round 8 — measured slower at
     every tested scale because its per-row sort carried each cell's full
@@ -920,7 +719,7 @@ def _topcells(embn: DataFrame, cent: DataFrame, nprobe: int, dot=None) -> DataFr
                             F.transform(
                                 "_cents",
                                 lambda c: F.struct(
-                                    _cos_e9(
+                                    cos_e9(
                                         dot(F.col("embedding"), c["ce"]),
                                         F.col("n2"),
                                         c["cn2"],
@@ -949,12 +748,12 @@ def _topcells(embn: DataFrame, cent: DataFrame, nprobe: int, dot=None) -> DataFr
     # prerank survives where it genuinely pays: the brute-force pair
     # scorers gate BigDecimal work per PAIR (llm_neardup_recall,
     # embedding_cells' pair scoring), not per cell-assignment.
-    cent_arr = cent.withColumn("cq", _qdec(F.col("ce"))).agg(
+    cent_arr = cent.withColumn("cq", qdec(F.col("ce"))).agg(
         F.collect_list(F.struct("cid", "cn2", "cq")).alias("_cents")
     )
     return (
         embn.crossJoin(F.broadcast(cent_arr))
-        .withColumn("_qe", _qdec(F.col("embedding")))
+        .withColumn("_qe", qdec(F.col("embedding")))
         .withColumn(
             "_top",
             F.slice(
@@ -963,8 +762,8 @@ def _topcells(embn: DataFrame, cent: DataFrame, nprobe: int, dot=None) -> DataFr
                         F.transform(
                             "_cents",
                             lambda c: F.struct(
-                                _cos_e9(
-                                    _dot_q(F.col("_qe"), c["cq"]),
+                                cos_e9(
+                                    dot_q(F.col("_qe"), c["cq"]),
                                     F.col("n2"),
                                     c["cn2"],
                                 ).alias("ce9"),
@@ -1013,7 +812,7 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     cent = embn.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cid"),
@@ -1040,17 +839,17 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = probes.join(assign, "cell").filter(
         F.col("vec_id") != F.col("query_vec_id")
     ).select("query_vec_id", F.col("vec_id").alias("neighbor_vec_id"))
-    # rerank sides carry the ONCE-quantized arrays (_qdec): candidates are
+    # rerank sides carry the ONCE-quantized arrays (qdec): candidates are
     # a constant fraction of the base (nprobe/K), so per-row quantization
     # below the join beats per-pair re-casting inside the dot by ~6x
     qe = embn.filter(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_vec_id"),
-        _qdec(F.col("embedding")).alias("qeq"),
+        qdec(F.col("embedding")).alias("qeq"),
         F.col("n2").alias("qn2"),
     )
     ne = embn.select(
         F.col("vec_id").alias("neighbor_vec_id"),
-        _qdec(F.col("embedding")).alias("neq"),
+        qdec(F.col("embedding")).alias("neq"),
         F.col("n2").alias("nn2"),
     )
     scored = (
@@ -1059,17 +858,21 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_vec_id",
             "neighbor_vec_id",
-            _cos_e9(
-                _dot_q(F.col("qeq"), F.col("neq")), F.col("qn2"), F.col("nn2")
+            cos_e9(
+                dot_q(F.col("qeq"), F.col("neq")), F.col("qn2"), F.col("nn2")
             ).alias("cos_sim_e9"),
         )
     )
     # two-phase exact ranked top-k (r12): the IVF candidate set is
     # ~nprobe/k_cells of the corpus per query — a single qid window
     # would rank it 8-way-parallel at any cluster size
-    return _ranked_topk_per_query(scored, IVF_TOPK).select(
-        "query_vec_id", "neighbor_vec_id", "rank", "cos_sim_e9"
-    )
+    return two_phase_topk(
+        scored,
+        ["query_vec_id"],
+        "neighbor_vec_id",
+        [F.col("cos_sim_e9").desc(), F.col("neighbor_vec_id")],
+        IVF_TOPK,
+    ).select("query_vec_id", "neighbor_vec_id", "rank", "cos_sim_e9")
 
 
 def llm_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1233,7 +1036,7 @@ def llm_dedup_embedding_cells(
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     k_cells = max(IVF_N_CENTROIDS, math.floor(math.sqrt(emb.count())))
     cent = embn.filter(F.col("vec_id") < k_cells).select(
@@ -1280,14 +1083,14 @@ def llm_dedup_embedding_cells(
                 # scored in cheap doubles, emitted values stay decimal-
                 # exact; see PRESCORE_MARGIN_E9 for the proof sketch)
                 F.when(
-                    _cos_e9(
-                        _dot_dbl(F.col("ea"), F.col("eb")),
+                    cos_e9(
+                        dot_dbl(F.col("ea"), F.col("eb")),
                         F.col("na2"),
                         F.col("nb2"),
                     )
                     >= NEARDUP_THRESHOLD_E9 - PRESCORE_MARGIN_E9,
-                    _cos_e9(
-                        _dot(F.col("ea"), F.col("eb")),
+                    cos_e9(
+                        dot(F.col("ea"), F.col("eb")),
                         F.col("na2"),
                         F.col("nb2"),
                     ),
@@ -1327,14 +1130,14 @@ def llm_dedup_embedding_cells(
             # double pre-score gating the exact-decimal rescore — see the
             # uncompressed branch / PRESCORE_MARGIN_E9 for the bound
             F.when(
-                _cos_e9(
-                    _dot_dbl(F.col("ea"), F.col("eb")),
+                cos_e9(
+                    dot_dbl(F.col("ea"), F.col("eb")),
                     F.col("na2"),
                     F.col("nb2"),
                 )
                 >= NEARDUP_THRESHOLD_E9 - PRESCORE_MARGIN_E9,
-                _cos_e9(
-                    _dot(F.col("ea"), F.col("eb")), F.col("na2"), F.col("nb2")
+                cos_e9(
+                    dot(F.col("ea"), F.col("eb")), F.col("na2"), F.col("nb2")
                 ),
             ).alias("cos_sim_e9"),
         )
@@ -1421,8 +1224,8 @@ def llm_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("ea"),
         # 64 broadcast rows: both norm flavors computed once per anchor
-        _dot(F.col("embedding"), F.col("embedding")).alias("na2"),
-        _dot_dbl(F.col("embedding"), F.col("embedding")).alias("na2d"),
+        dot(F.col("embedding"), F.col("embedding")).alias("na2"),
+        dot_dbl(F.col("embedding"), F.col("embedding")).alias("na2d"),
     )
     true_pairs = (
         F.broadcast(anchors)
@@ -1437,16 +1240,16 @@ def llm_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             # when-branch, i.e. for margin survivors (see
             # PRESCORE_MARGIN_E9 for the double-norm bound)
             F.when(
-                _cos_e9(
-                    _dot_dbl(F.col("ea"), F.col("embedding")),
+                cos_e9(
+                    dot_dbl(F.col("ea"), F.col("embedding")),
                     F.col("na2d"),
-                    _dot_dbl(F.col("embedding"), F.col("embedding")),
+                    dot_dbl(F.col("embedding"), F.col("embedding")),
                 )
                 >= NEARDUP_THRESHOLD_E9 - PRESCORE_MARGIN_E9,
-                _cos_e9(
-                    _dot(F.col("ea"), F.col("embedding")),
+                cos_e9(
+                    dot(F.col("ea"), F.col("embedding")),
                     F.col("na2"),
-                    _dot(F.col("embedding"), F.col("embedding")),
+                    dot(F.col("embedding"), F.col("embedding")),
                 ),
             ).alias("cos_sim_e9"),
         )
@@ -1531,7 +1334,7 @@ def llm_embedding_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     cent = embn.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cid"),
@@ -1625,26 +1428,6 @@ def llm_dedup_clusters(
 # ---------------------------------------------------------------------------
 KMV_K = 64
 KMV_SALT = 16  # k-min fold fanout: buckets per group in the partial agg
-_KMV_HEX_DIGITS = 12  # 48-bit hash value: fits BIGINT exactly
-_KMV_M = 16 ** _KMV_HEX_DIGITS
-
-
-def _hexval_sql(col: str, fn: str) -> str:
-    """Numeric value of the first 12 hex chars of ``col`` — identical text
-    for Spark (fn='instr') and DuckDB (fn='strpos').
-
-    Every coefficient is CAST to BIGINT: bare ``16**7`` parses as INT32, and
-    ``(instr(..)-1) * 268435456`` overflows 32-bit exactly when the digit is
-    >= 8 — an ANSI-mode runtime error that only fires on half of all hash
-    values (a data-dependent landmine, found when a new query hashed every
-    doc instead of just the k-th order statistic). The whole sum is
-    parenthesized so callers can inline it into larger expressions without
-    a trailing operator rebinding to just the last term."""
-    return "(" + " + ".join(
-        f"({fn}('{_HEX}', substr({col}, {i + 1}, 1)) - 1) * "
-        f"CAST({16 ** (_KMV_HEX_DIGITS - 1 - i)} AS BIGINT)"
-        for i in range(_KMV_HEX_DIGITS)
-    ) + ")"
 
 
 def _kmv_group_sketch(e) -> DataFrame:
@@ -1659,7 +1442,7 @@ def _kmv_group_sketch(e) -> DataFrame:
         "event_type", F.md5(F.col("user_id").cast("string")).alias("hx")
     )
     salted = h.withColumn(
-        "salt", F.expr(f"instr('{_HEX}', substr(hx, 1, 1)) % {KMV_SALT}")
+        "salt", F.expr(f"instr('{HEX}', substr(hx, 1, 1)) % {KMV_SALT}")
     )
     partial = (
         salted.groupBy("event_type", "salt")
@@ -1690,7 +1473,7 @@ WITH h AS (
            COUNT(*) OVER (PARTITION BY event_type) AS n
     FROM h
 ), kth AS (
-    SELECT event_type, n, {_hexval_sql("hx", "strpos")} AS v
+    SELECT event_type, n, {hexval_sql("hx", "strpos")} AS v
     FROM r WHERE rn = LEAST(n, {KMV_K})
 ), exact AS (
     SELECT event_type, COUNT(DISTINCT user_id) AS ex
@@ -1701,7 +1484,7 @@ WITH h AS (
     SELECT hx, row_number() OVER (ORDER BY hx) AS rn, COUNT(*) OVER () AS n
     FROM gh
 ), gkth AS (
-    SELECT n, {_hexval_sql("hx", "strpos")} AS v
+    SELECT n, {hexval_sql("hx", "strpos")} AS v
     FROM gr WHERE rn = LEAST(n, {KMV_K})
 ), gexact AS (
     SELECT COUNT(DISTINCT user_id) AS ex
@@ -1710,20 +1493,20 @@ WITH h AS (
 SELECT e.event_type,
        CAST(e.ex AS BIGINT) AS exact_distinct,
        CAST(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {_KMV_M}) // greatest(k.v, 1) END AS BIGINT)
+                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END AS BIGINT)
            AS kmv_estimate,
        CAST((1000 * abs(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {_KMV_M}) // greatest(k.v, 1) END - e.ex)) // e.ex
+                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END - e.ex)) // e.ex
             AS BIGINT) AS err_permille
 FROM exact e JOIN kth k ON e.event_type = k.event_type
 UNION ALL
 SELECT '(all)' AS event_type,
        CAST(e.ex AS BIGINT) AS exact_distinct,
        CAST(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {_KMV_M}) // greatest(k.v, 1) END AS BIGINT)
+                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END AS BIGINT)
            AS kmv_estimate,
        CAST((1000 * abs(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {_KMV_M}) // greatest(k.v, 1) END - e.ex)) // e.ex
+                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END - e.ex)) // e.ex
             AS BIGINT) AS err_permille
 FROM gexact e, gkth k
 """,
@@ -1775,7 +1558,7 @@ def llm_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
         F.expr(
-            _hexval_sql(
+            hexval_sql(
                 f"element_at(kmin_all, cast(least(n, {KMV_K}) as int))", "instr"
             )
         ).alias("v"),
@@ -1784,7 +1567,7 @@ def llm_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id").alias("ex")
     )
     est = F.when(F.col("n") < KMV_K, F.col("n")).otherwise(
-        F.expr(f"({KMV_K - 1} * {_KMV_M}) div greatest(v, 1)")
+        F.expr(f"({KMV_K - 1} * {KMV_M}) div greatest(v, 1)")
     )
     per_type = (
         exact.join(kth, "event_type")
@@ -1813,7 +1596,7 @@ def llm_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.size("km").cast("bigint").alias("m"),
         F.expr(
-            _hexval_sql(
+            hexval_sql(
                 f"element_at(km, cast(least(size(km), {KMV_K}) as int))", "instr"
             )
         ).alias("v"),
@@ -1823,7 +1606,7 @@ def llm_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "jk", F.lit(1)
     )
     gest = F.when(F.col("m") < KMV_K, F.col("m")).otherwise(
-        F.expr(f"({KMV_K - 1} * {_KMV_M}) div greatest(v, 1)")
+        F.expr(f"({KMV_K - 1} * {KMV_M}) div greatest(v, 1)")
     )
     all_row = (
         gexact.join(merged, "jk")  # 1-row x 1-row equi join on a constant key
@@ -1985,7 +1768,7 @@ def llm_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     cent0 = embn.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cid"),
@@ -2055,15 +1838,15 @@ def llm_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("neighbor_vec_id") != F.col("query_vec_id")
     ).select("query_vec_id", "neighbor_vec_id")
     # rerank with side-quantized arrays (same as llm_ann_ivf's rerank —
-    # the per-pair re-casting _dot is the ~6x overhead _dot_q removes)
+    # the per-pair re-casting dot is the ~6x overhead dot_q removes)
     qe = embn.filter(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_vec_id"),
-        _qdec(F.col("embedding")).alias("qeq"),
+        qdec(F.col("embedding")).alias("qeq"),
         F.col("n2").alias("qn2"),
     )
     ne = embn.select(
         F.col("vec_id").alias("neighbor_vec_id"),
-        _qdec(F.col("embedding")).alias("neq"),
+        qdec(F.col("embedding")).alias("neq"),
         F.col("n2").alias("nn2"),
     )
     tscored = (
@@ -2072,15 +1855,19 @@ def llm_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_vec_id",
             "neighbor_vec_id",
-            _cos_e9(
-                _dot_q(F.col("qeq"), F.col("neq")), F.col("qn2"), F.col("nn2")
+            cos_e9(
+                dot_q(F.col("qeq"), F.col("neq")), F.col("qn2"), F.col("nn2")
             ).alias("cos_sim_e9"),
         )
     )
-    # two-phase exact ranked top-k (r12) — see _ranked_topk_per_query
-    ttopk = _ranked_topk_per_query(tscored, IVF_TOPK).select(
-        "query_vec_id", F.col("neighbor_vec_id").alias("tn")
-    )
+    # two-phase exact ranked top-k (r12) — see operators.topk
+    ttopk = two_phase_topk(
+        tscored,
+        ["query_vec_id"],
+        "neighbor_vec_id",
+        [F.col("cos_sim_e9").desc(), F.col("neighbor_vec_id")],
+        IVF_TOPK,
+    ).select("query_vec_id", F.col("neighbor_vec_id").alias("tn"))
     brute = llm_ann_cosine_topk(spark, sf_dir).select(
         "query_vec_id", "neighbor_vec_id"
     )

@@ -37,8 +37,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
+from ..operators.text import hexval_sql
 from .catalog import query
-from .llm_scale_queries import _hexval_sql
 
 # ---------------------------------------------------------------------------
 # llm_text_unigram_surprisal — unigram-LM document rarity score.
@@ -525,8 +525,8 @@ def llm_dedup_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 CM_DEPTH = 4
 CM_WIDTH = 256
 
-_CM_HV = _hexval_sql("hx", "instr")
-_CM_HV_ORA = _hexval_sql("md5(token || ':cm' || CAST(rw AS VARCHAR))", "strpos")
+_CM_HV = hexval_sql("hx", "instr")
+_CM_HV_ORA = hexval_sql("md5(token || ':cm' || CAST(rw AS VARCHAR))", "strpos")
 
 
 def _cm_hashed(tc: DataFrame) -> DataFrame:

@@ -43,9 +43,22 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
+from ..operators.text import (
+    HEX,
+    KMV_M,
+    MINHASH_K,
+    SHINGLE_SQL,
+    hexval_sql,
+    is_trigram,
+    minhash_signatures,
+    shingles,
+    trigrams,
+)
+from ..operators.topk import two_phase_topk
+from ..tables import PPB
 from .catalog import query
-from .llm_multimodal import _fixed_ppm_frame, ahash_image
-from .llm_scale_queries import _KMV_M, KMV_K, MINHASH_K, _hexval_sql, _shingles
+from .llm_multimodal import ahash_image, fixed_ppm_frame
+from .llm_scale_queries import KMV_K
 
 # ---------------------------------------------------------------------------
 # llm_multimodal_image_dedup — perceptual aHash near-dup grouping.
@@ -107,7 +120,7 @@ def llm_multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Keeper = min(doc_id) per hash — a deterministic total order on both
     engines (catalog dedup contract)."""
     fp = (
-        ahash_image(_fixed_ppm_frame(spark, sf_dir))
+        ahash_image(fixed_ppm_frame(spark, sf_dir))
         .filter(F.col("ok"))
         .select("doc_id", "ahash", "n_ones")
         .localCheckpoint()  # codec runs once; agg + join-back reuse it
@@ -148,7 +161,7 @@ CAP_NSALT = 16  # phase-1 fanout (4096+ on a real cluster)
     oracle=f"""
 WITH h AS (
     SELECT source, doc_id,
-           {_hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")} AS u
+           {hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")} AS u
     FROM documents
 ), r AS (
     SELECT source, doc_id, u,
@@ -174,23 +187,16 @@ def llm_sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5(F.col("doc_id").cast("string")).alias("hx"),
     )
-    h = d.withColumn("u", F.expr(_hexval_sql("hx", "instr"))).drop("hx")
-    phase1 = Window.partitionBy(
-        "source", F.col("doc_id") % CAP_NSALT
-    ).orderBy("u", "doc_id")
-    cand = (
-        h.withColumn("rn1", F.row_number().over(phase1))
-        .filter(F.col("rn1") <= DOMAIN_CAP)
-        .drop("rn1")
-    )
-    phase2 = Window.partitionBy("source").orderBy("u", "doc_id")
-    return (
-        cand.withColumn(
-            "pick_rank", F.row_number().over(phase2).cast("bigint")
-        )
-        .filter(F.col("pick_rank") <= DOMAIN_CAP)
-        .select("source", "pick_rank", "doc_id", "u")
-    )
+    h = d.withColumn("u", F.expr(hexval_sql("hx", "instr"))).drop("hx")
+    return two_phase_topk(
+        h,
+        ["source"],
+        "doc_id",
+        ["u", "doc_id"],
+        DOMAIN_CAP,
+        salt=CAP_NSALT,
+        rank_col="pick_rank",
+    ).select("source", "pick_rank", "doc_id", "u")
 
 
 # ---------------------------------------------------------------------------
@@ -390,7 +396,7 @@ def llm_multimodal_image_neardup_pairs(
     of llm_dedup_simhash_pairs; candidates — never the image corpus —
     cross the shuffle."""
     fp = (
-        ahash_image(_fixed_ppm_frame(spark, sf_dir))
+        ahash_image(fixed_ppm_frame(spark, sf_dir))
         .filter(F.col("ok"))
         .select("doc_id", "ahash")
         .localCheckpoint()  # codec once; both join sides read the frame
@@ -450,7 +456,7 @@ def llm_multimodal_image_neardup_pairs(
 # IVF/PQ: per-dim [min, max] over the corpus, 8-bit codes
 # code = (v - min) * 255 div (max - min), reconstruction
 # v' = min + code * (max - min) div 255. Everything runs on the shared
-# DECIMAL(9,7) e7-integer ladder (llm_queries._dec7), so codes and error
+# DECIMAL(9,7) e7-integer ladder (operators.vectors.dec7), so codes and error
 # statistics are exact integers on both engines.
 #
 # Scale: classic two-pass — pass 1 folds the corpus to 64 (dim, min, max)
@@ -631,17 +637,17 @@ WITH s AS (
            COUNT(*) OVER (PARTITION BY col_name) AS n
     FROM h
 ), kth AS (
-    SELECT col_name, n, {_hexval_sql("hx", "strpos")} AS v
+    SELECT col_name, n, {hexval_sql("hx", "strpos")} AS v
     FROM r WHERE rn = LEAST(n, {KMV_K})
 ), mm AS (
     {minmax}
 )
 SELECT p.col_name, p.n_rows, p.n_nonnull, p.ndv_exact,
        CAST(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {_KMV_M}) // greatest(k.v, 1) END
+                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END
             AS BIGINT) AS ndv_kmv_est,
        CAST((1000 * abs(CASE WHEN k.n < {KMV_K} THEN k.n
-                             ELSE ({KMV_K - 1} * {_KMV_M})
+                             ELSE ({KMV_K - 1} * {KMV_M})
                                   // greatest(k.v, 1) END
                         - p.ndv_exact)) // greatest(p.ndv_exact, 1)
             AS BIGINT) AS ndv_err_permille,
@@ -683,7 +689,7 @@ def dq_table_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "col_name", F.md5("repr").alias("hx")
     )
     salted = h.withColumn(
-        "salt", F.expr(f"instr('0123456789abcdef', substr(hx, 1, 1)) % 16")
+        "salt", F.expr(f"instr('{HEX}', substr(hx, 1, 1)) % 16")
     )
     partial = (
         salted.groupBy("col_name", "salt")
@@ -706,7 +712,7 @@ def dq_table_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "col_name",
             "n",
             F.expr(
-                _hexval_sql(
+                hexval_sql(
                     f"element_at(kmin_all, cast(least(n, {KMV_K}) as int))",
                     "instr",
                 )
@@ -748,7 +754,7 @@ def dq_table_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     est = F.when(F.col("n") < KMV_K, F.col("n")).otherwise(
-        F.expr(f"({KMV_K - 1} * {_KMV_M}) div greatest(v, 1)")
+        F.expr(f"({KMV_K - 1} * {KMV_M}) div greatest(v, 1)")
     )
     return (
         prof.join(kth, "col_name")
@@ -793,7 +799,7 @@ def _kmv_set_sketch(df: DataFrame, key: str) -> DataFrame:
         F.md5(F.col(key).cast("string")).alias("hx")
     )
     salted = h.withColumn(
-        "salt", F.expr("instr('0123456789abcdef', substr(hx, 1, 1)) % 16")
+        "salt", F.expr(f"instr('{HEX}', substr(hx, 1, 1)) % 16")
     )
     partial = (
         salted.groupBy("salt")
@@ -834,7 +840,7 @@ WITH a AS (
            (SELECT n FROM rb LIMIT 1) AS n_b
 ), th AS (
     SELECT n_a, n_b, LEAST(tha, thb) AS theta_hx,
-           {_hexval_sql("LEAST(tha, thb)", "strpos")} AS theta_v
+           {hexval_sql("LEAST(tha, thb)", "strpos")} AS theta_v
     FROM kth
 ), below AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n_below
@@ -849,9 +855,9 @@ WITH a AS (
 SELECT CAST(th.n_a AS BIGINT) AS n_a_exact,
        CAST(th.n_b AS BIGINT) AS n_b_exact,
        e.inter_exact,
-       CAST((below.n_below * {_KMV_M}) // greatest(th.theta_v, 1) AS BIGINT)
+       CAST((below.n_below * {KMV_M}) // greatest(th.theta_v, 1) AS BIGINT)
            AS inter_est,
-       CAST((1000 * abs((below.n_below * {_KMV_M})
+       CAST((1000 * abs((below.n_below * {KMV_M})
                         // greatest(th.theta_v, 1) - e.inter_exact))
             // greatest(e.inter_exact, 1) AS BIGINT) AS err_permille
 FROM th, below, exact e
@@ -890,7 +896,7 @@ def dq_sketch_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(size(filter(array_intersect(ka, kb), x -> x < theta_hx))"
             " as bigint)"
         ).alias("n_below"),
-        F.expr(_hexval_sql("theta_hx", "instr")).alias("theta_v"),
+        F.expr(hexval_sql("theta_hx", "instr")).alias("theta_v"),
     )
     exact = (
         o.select(F.col("o_custkey").alias("k"))
@@ -908,10 +914,10 @@ def dq_sketch_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_b").cast("bigint").alias("n_b_exact"),
         "inter_exact",
         F.expr(
-            f"cast((n_below * {_KMV_M}) div greatest(theta_v, 1) as bigint)"
+            f"cast((n_below * {KMV_M}) div greatest(theta_v, 1) as bigint)"
         ).alias("inter_est"),
         F.expr(
-            f"cast((1000 * abs((n_below * {_KMV_M})"
+            f"cast((1000 * abs((n_below * {KMV_M})"
             f" div greatest(theta_v, 1) - inter_exact))"
             " div greatest(inter_exact, 1) as bigint)"
         ).alias("err_permille"),
@@ -1220,7 +1226,7 @@ def stats_profile_partials(batch: DataFrame) -> DataFrame:
         F.when(
             F.col("repr").isNotNull(),
             F.expr(
-                "instr('0123456789abcdef', substr(md5(repr), 1, 1)) % 16"
+                f"instr('{HEX}', substr(md5(repr), 1, 1)) % 16"
             ),
         )
         .otherwise(F.lit(-1))
@@ -1261,14 +1267,14 @@ def stats_profile_finalize(partials: DataFrame) -> DataFrame:
     kth = merged.withColumn(
         "v",
         F.expr(
-            _hexval_sql(
+            hexval_sql(
                 f"element_at(kmin_all, cast(least(n, {KMV_K}) as int))",
                 "instr",
             )
         ),
     )
     est = F.when(F.col("n") < KMV_K, F.col("n")).otherwise(
-        F.expr(f"({KMV_K - 1} * {_KMV_M}) div greatest(v, 1)")
+        F.expr(f"({KMV_K - 1} * {KMV_M}) div greatest(v, 1)")
     )
     return kth.select(
         "col_name",
@@ -1299,7 +1305,6 @@ def stats_profile_finalize(partials: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 PR_ITERS = 3
 PR_DAMP_NUM = 85  # damping factor 0.85 as an exact ratio
-_PPB = 10**9
 
 
 def _pagerank_oracle() -> str:
@@ -1320,7 +1325,7 @@ WITH s AS (
 ), outs AS (
     SELECT src, CAST(SUM(cnt) AS BIGINT) AS out_cnt FROM e GROUP BY 1
 ), r0 AS (
-    SELECT node, {_PPB} // nn.n AS rank_ppb FROM nodes, nn
+    SELECT node, {PPB} // nn.n AS rank_ppb FROM nodes, nn
 )"""
     rounds = []
     for i in range(PR_ITERS):
@@ -1336,7 +1341,7 @@ WITH s AS (
     WHERE o.src IS NULL
 ), r{i + 1} AS (
     SELECT n.node,
-           (({100 - PR_DAMP_NUM} * ({_PPB} // nn.n)) // 100)
+           (({100 - PR_DAMP_NUM} * ({PPB} // nn.n)) // 100)
            + ({PR_DAMP_NUM} * (COALESCE(c.contrib, 0) + d.dang // nn.n))
              // 100 AS rank_ppb
     FROM nodes n CROSS JOIN nn CROSS JOIN d{i} d
@@ -1400,7 +1405,7 @@ def pagerank_from_edges(edges: DataFrame) -> DataFrame:
     ).localCheckpoint()
     ranks = (
         nodes.crossJoin(F.broadcast(nn))
-        .select("node", F.expr(f"{_PPB} div n").alias("rank_ppb"))
+        .select("node", F.expr(f"{PPB} div n").alias("rank_ppb"))
         .localCheckpoint()
     )
     for _i in range(PR_ITERS):
@@ -1429,7 +1434,7 @@ def pagerank_from_edges(edges: DataFrame) -> DataFrame:
             .select(
                 "node",
                 F.expr(
-                    f"(({100 - PR_DAMP_NUM} * ({_PPB} div n)) div 100)"
+                    f"(({100 - PR_DAMP_NUM} * ({PPB} div n)) div 100)"
                     f" + ({PR_DAMP_NUM} * (coalesce(contrib, 0)"
                     f" + dang div n)) div 100"
                 ).alias("rank_ppb"),
@@ -1483,17 +1488,6 @@ _HLL_W = 44  # bits consumed by rho after the bucket byte
 _HLL_ALPHA_NUM, _HLL_ALPHA_DEN = 709, 1000  # alpha_64 = 0.709 pinned
 
 
-def _hexv(col: str, start: int, nd: int, fn: str) -> str:
-    """Numeric value of ``nd`` hex chars of ``col`` from 1-based ``start``
-    — the generalized `_hexval_sql` (same BIGINT-cast discipline; see its
-    docstring for the INT32-overflow landmine)."""
-    return "(" + " + ".join(
-        f"({fn}('0123456789abcdef', substr({col}, {start + i}, 1)) - 1) * "
-        f"CAST({16 ** (nd - 1 - i)} AS BIGINT)"
-        for i in range(nd)
-    ) + ")"
-
-
 def hll_register_partials(keyed: DataFrame) -> DataFrame:
     """Per-(grp, bucket) max-rho registers for any slice of a (grp, key)
     frame — mergeable by MAX, so micro-batch partials union + re-max to
@@ -1505,8 +1499,8 @@ def hll_register_partials(keyed: DataFrame) -> DataFrame:
     )
     br = h.select(
         "grp",
-        F.expr(f"{_hexv('hx', 1, 2, 'instr')} % {HLL_M}").alias("bucket"),
-        F.expr(_hexv("hx", 3, 11, "instr")).alias("v"),
+        F.expr(f"{hexval_sql('hx', 'instr', 1, 2)} % {HLL_M}").alias("bucket"),
+        F.expr(hexval_sql("hx", "instr", 3, 11)).alias("v"),
     )
     return br.groupBy("grp", "bucket").agg(
         F.expr(
@@ -1562,8 +1556,8 @@ WITH {_SHINGLE_SQL_SRC}, h AS (
     SELECT source AS grp, md5(shingle) AS hx FROM shs
 ), br AS (
     SELECT grp,
-           {_hexv("hx", 1, 2, "strpos")} % {HLL_M} AS bucket,
-           {_hexv("hx", 3, 11, "strpos")} AS v
+           {hexval_sql("hx", "strpos", 1, 2)} % {HLL_M} AS bucket,
+           {hexval_sql("hx", "strpos", 3, 11)} AS v
     FROM h
 ), reg AS (
     SELECT grp, bucket,
@@ -1592,7 +1586,7 @@ FROM est e JOIN exact x ON e.grp = x.grp
 """
 
 
-# the minhash family's shingle construction (_SHINGLE_SQL) with the
+# the minhash family's shingle construction (SHINGLE_SQL) with the
 # source column carried through — HLL needs no per-doc DISTINCT (MAX
 # absorbs duplicates), so the sh CTE's dedup is skipped
 _SHINGLE_SQL_SRC = """toks AS (
@@ -1607,29 +1601,14 @@ _SHINGLE_SQL_SRC = """toks AS (
 
 
 def _source_shingles(d: DataFrame) -> DataFrame:
-    """(grp=source, key=shingle) rows — the `_shingles` construction
-    (llm_scale_queries.py) minus the per-doc distinct, which HLL does not
-    need. Map-only: split -> transform -> explode, no join, no shuffle."""
+    """(grp=source, key=shingle) rows — operators.text's trigram kernel
+    without the per-doc distinct, which HLL does not need. Map-only:
+    split -> transform -> explode, no join, no shuffle."""
     toks = d.select("source", F.split("text", " ").alias("t"))
-    return (
-        toks.select(
-            F.col("source").alias("grp"),
-            F.explode(
-                F.transform(
-                    F.sequence(
-                        F.lit(0), F.greatest(F.size("t") - 3, F.lit(0))
-                    ),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.try_element_at(F.col("t"), i + 1),
-                        F.try_element_at(F.col("t"), i + 2),
-                        F.try_element_at(F.col("t"), i + 3),
-                    ),
-                )
-            ).alias("key"),
-        )
-        .filter(F.size(F.split("key", " ")) == 3)
-    )
+    return toks.select(
+        F.col("source").alias("grp"),
+        F.explode(trigrams(F.col("t"))).alias("key"),
+    ).filter(is_trigram("key"))
 
 
 @query(
@@ -1870,7 +1849,7 @@ WINNOW_MIN_SHARED = 2  # candidate pairs must share >= this many prints
 
 def _winnow_oracle() -> str:
     hexpoly = " + ".join(
-        f"(strpos('0123456789abcdef', substr(x, {i + 1}, 1)) - 1) * "
+        f"(strpos('{HEX}', substr(x, {i + 1}, 1)) - 1) * "
         f"CAST({16 ** (10 - i)} AS BIGINT)"
         for i in range(11)
     )
@@ -1914,7 +1893,7 @@ def winnow_fingerprint_rows(d: DataFrame) -> DataFrame:
     """(doc_id, f) winnowing fingerprints — one codegen'd projection from
     text to the selected hash set (k-gram md5 -> 44-bit int -> sliding
     window-of-{WINNOW_W} minima -> distinct), then explode. Map-only."""
-    hexpoly = _hexv("x", 1, 11, "instr")
+    hexpoly = hexval_sql("x", "instr", 1, 11)
     return (
         d.filter(F.size(F.split("text", " ")) >= 6)
         .select(
@@ -2406,15 +2385,15 @@ def vocab_drift_finalize(parts: DataFrame) -> DataFrame:
 
 
 def _langid_pred_cte() -> str:
-    from .llm_queries import LANG_STOPWORDS, _hits_sql
+    from .llm_queries import LANG_STOPWORDS, hits_sql
 
     return f"""
 h AS (
     SELECT lang AS labeled_lang,
-           {_hits_sql(LANG_STOPWORDS['en'])} AS en_hits,
-           {_hits_sql(LANG_STOPWORDS['fr'])} AS fr_hits,
-           {_hits_sql(LANG_STOPWORDS['es'])} AS es_hits,
-           {_hits_sql(LANG_STOPWORDS['de'])} AS de_hits
+           {hits_sql(LANG_STOPWORDS['en'])} AS en_hits,
+           {hits_sql(LANG_STOPWORDS['fr'])} AS fr_hits,
+           {hits_sql(LANG_STOPWORDS['es'])} AS es_hits,
+           {hits_sql(LANG_STOPWORDS['de'])} AS de_hits
     FROM documents
 ), pred AS (
     SELECT labeled_lang,
@@ -2614,8 +2593,6 @@ LSH_CURVE_SAMPLE_SALT = 32  # two-phase top-K fan-out (reservoir pattern)
 
 
 def _lsh_curve_oracle() -> str:
-    from .llm_scale_queries import _SHINGLE_SQL, MINHASH_K
-
     mins = ",\n           ".join(
         f"MIN(md5('{i}:' || shingle)) AS h{i}" for i in range(MINHASH_K)
     )
@@ -2627,7 +2604,7 @@ def _lsh_curve_oracle() -> str:
         for j in range(b)
     )
     return f"""
-WITH {_SHINGLE_SQL},
+WITH {SHINGLE_SQL},
 mh AS (
     SELECT doc_id, {mins} FROM sh GROUP BY 1
 ), bands AS (
@@ -2641,7 +2618,7 @@ mh AS (
 ), tsmp AS (
     SELECT doc_id FROM (
         SELECT doc_id, ROW_NUMBER() OVER (
-            ORDER BY {_hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")},
+            ORDER BY {hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")},
                      doc_id) AS rnk
         FROM mh
     ) WHERE rnk <= {LSH_CURVE_TRUTH_DOCS}
@@ -2721,7 +2698,7 @@ def llm_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap exceeds the corpus, so the sample IS the corpus and the curve
     is exact."""
     d = T.load(spark, sf_dir, "documents")
-    sh = _shingles(d).localCheckpoint()  # mh + truth (x2 sides) + sizes
+    sh = shingles(d).localCheckpoint()  # mh + truth (x2 sides) + sizes
     return _lsh_curve_from_shingles(sh)
 
 
@@ -2731,7 +2708,7 @@ def lsh_curve_shingle_partials(docs_batch: DataFrame) -> DataFrame:
     within-document, so partials are union-mergeable with no re-dedup —
     streaming state is the shingle fingerprint table (the
     incremental_minhash_pairs state shape), never document text."""
-    return _shingles(docs_batch)
+    return shingles(docs_batch)
 
 
 def lsh_curve_finalize(parts: DataFrame) -> DataFrame:
@@ -2749,18 +2726,7 @@ def _lsh_curve_from_shingles(sh: DataFrame) -> DataFrame:
     """Curve core over a (doc_id, shingle) frame that is already safe to
     fan out (checkpointed by both callers: mh + truth x2 + sizes read
     it)."""
-    mh = (
-        sh.groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))
-                ).alias(f"h{i}")
-                for i in range(MINHASH_K)
-            ]
-        )
-        .localCheckpoint()  # one signature pass feeds every config
-    )
+    mh = minhash_signatures(sh)  # one signature pass feeds every config
     bands = mh.select(
         "doc_id",
         F.explode(
@@ -2809,19 +2775,16 @@ def _lsh_curve_from_shingles(sh: DataFrame) -> DataFrame:
     # draws the identical sample from merged partials.
     hdoc = mh.select("doc_id").withColumn(
         "hx", F.md5(F.col("doc_id").cast("string"))
-    ).withColumn("u", F.expr(_hexval_sql("hx", "instr")))
-    w1 = Window.partitionBy(
-        F.expr(f"doc_id % {LSH_CURVE_SAMPLE_SALT}")
-    ).orderBy("u", "doc_id")
-    surv = (
-        hdoc.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= LSH_CURVE_TRUTH_DOCS)
-        .select("doc_id", "u")
-    )
-    w2 = Window.orderBy("u", "doc_id")
+    ).withColumn("u", F.expr(hexval_sql("hx", "instr")))
     tsample = (
-        surv.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= LSH_CURVE_TRUTH_DOCS)
+        two_phase_topk(
+            hdoc,
+            [],
+            "doc_id",
+            ["u", "doc_id"],
+            LSH_CURVE_TRUTH_DOCS,
+            salt=LSH_CURVE_SAMPLE_SALT,
+        )
         .select("doc_id")
         .localCheckpoint()  # 4 consumers: shs, both cand flags, stats
     )

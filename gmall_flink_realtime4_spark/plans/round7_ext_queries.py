@@ -47,10 +47,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
+from ..operators.text import hexval_sql
+from ..operators.topk import two_phase_topk
+from ..operators.vectors import VEC_DEC
 from ..tables import MONEY
 from .catalog import query
-from .llm_queries import VEC_DEC
-from .llm_scale_queries import _KMV_M, _hexval_sql
 
 # ---------------------------------------------------------------------------
 # f_skyline_pareto_suppliers — 2-D skyline over per-supplier aggregates.
@@ -389,7 +390,7 @@ RES_SALT = 32
     oracle=f"""
 WITH h AS (
     SELECT doc_id, source,
-           {_hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")} AS u
+           {hexval_sql("md5(CAST(doc_id AS VARCHAR))", "strpos")} AS u
     FROM documents
 ), r AS (
     SELECT doc_id, source, u,
@@ -421,26 +422,18 @@ def llm_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 def reservoir_sample(
     d: DataFrame, k: int = RES_K, salt: int = RES_SALT
 ) -> DataFrame:
-    """Two-phase deterministic top-k core over any (doc_id, source) frame
-    — split out so the equivalence test can prove two-phase == global on
-    synthetic corpora with adversarial salt skew."""
+    """Deterministic md5-rank top-k over any (doc_id, source) frame (the
+    operators.topk two-phase rank) — split out so the equivalence test can
+    prove two-phase == global on synthetic corpora with adversarial salt
+    skew."""
     h = d.select(
         "doc_id",
         "source",
         F.md5(F.col("doc_id").cast("string")).alias("hx"),
-    ).withColumn("u", F.expr(_hexval_sql("hx", "instr")))
-    w1 = Window.partitionBy(F.expr(f"doc_id % {salt}")).orderBy("u", "doc_id")
-    survivors = (
-        h.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= k)
-        .select("doc_id", "source", "u")
-    )
-    w2 = Window.orderBy("u", "doc_id")
-    return (
-        survivors.withColumn("rnk", F.row_number().over(w2).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("rnk", "doc_id", "u", "source")
-    )
+    ).withColumn("u", F.expr(hexval_sql("hx", "instr")))
+    return two_phase_topk(
+        h, [], "doc_id", ["u", "doc_id"], k, salt=salt, rank_col="rnk"
+    ).select("rnk", "doc_id", "u", "source")
 
 
 # ---------------------------------------------------------------------------

@@ -82,7 +82,7 @@ QUALITY_MODEL: dict[str, int] = {
 
 _STOP = "('the', 'a', 'of', 'to', 'and')"
 
-_FEATURES_SQL = f"""
+FEATURES_SQL = f"""
 f AS (
     SELECT doc_id, lang,
            CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -116,7 +116,7 @@ m AS (
 @query(
     "llm_quality_classifier",
     oracle=f"""
-WITH {_FEATURES_SQL.lstrip()}, {_MODEL_SQL.lstrip()}
+WITH {FEATURES_SQL.lstrip()}, {_MODEL_SQL.lstrip()}
 SELECT doc_id, n_tokens, mean_token_len_permille, stopword_permille,
        distinct_token_permille, ari_c100,
        CAST(bias_milli

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import tables as T
 from .catalog import query
-from .round8_ext_queries import _FEATURES_SQL, QUALITY_MODEL, quality_features
+from .round8_ext_queries import FEATURES_SQL, QUALITY_MODEL, quality_features
 
 # ---------------------------------------------------------------------------
 # llm_quality_train_step — normal-equation sufficient statistics.
@@ -143,7 +143,7 @@ def quality_train_gram(x: DataFrame) -> DataFrame:
 @query(
     "llm_quality_train_step",
     oracle=f"""
-WITH {_FEATURES_SQL.lstrip()}, x AS (
+WITH {FEATURES_SQL.lstrip()}, x AS (
     SELECT {_X_SQL},
            CAST({TRAIN_LABEL_SQL} AS {TRAIN_DEC}) AS y
     FROM f

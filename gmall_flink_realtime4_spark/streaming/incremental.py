@@ -40,12 +40,8 @@ from pyspark.errors import AnalysisException
 
 from ..operators.graph import connected_components
 from ..operators.pq import argmin_codes, pq_fullint, pq_subint
-from ..plans.llm_scale_queries import (
-    DUP_CLUSTER_THRESHOLD_PM,
-    _shingles,
-    minhash_bands,
-    minhash_verify,
-)
+from ..operators.text import minhash_bands, minhash_verify, shingles
+from ..plans.llm_scale_queries import DUP_CLUSTER_THRESHOLD_PM
 
 
 def _read_state(
@@ -77,7 +73,7 @@ def incremental_minhash_pairs(
     batch = docs_batch.select("doc_id", "text").localCheckpoint(eager=True)
     # minhash_bands checkpoints the signature frame internally; the band
     # explode above it is cheap, so no second materialization here
-    bands_b = minhash_bands(_shingles(batch))
+    bands_b = minhash_bands(shingles(batch))
 
     prev_bands = _read_state(spark, bands_path, batch_id)
     prev_docs = _read_state(spark, docs_path, batch_id)
@@ -117,7 +113,7 @@ def incremental_minhash_pairs(
     docs_cand = docs_all.join(cand_ids, "doc_id", "left_semi")
     # verify BEFORE the state writes (docs_all lazily reads the state
     # parquet) and materialize the result for the same reason
-    out = minhash_verify(cand, _shingles(docs_cand)).localCheckpoint(
+    out = minhash_verify(cand, shingles(docs_cand)).localCheckpoint(
         eager=True
     )
 

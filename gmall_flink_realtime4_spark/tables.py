@@ -51,6 +51,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # money / measure scale used everywhere (see module docstring)
 MONEY = "decimal(18,2)"
 AGG = "decimal(38,6)"  # internal only; final outputs cast to double
+PPB = 10**9  # parts-per-billion scale of exact integer ratio scores
+
+# the events table's event_type domain (explicit pivot/unpivot value list)
+EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
 _SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}

@@ -122,7 +122,7 @@ def test_ivf_assignment_is_map_only(spark):
     import pyspark.sql.functions as F
 
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.llm_queries import _dot
+    from gmall_flink_realtime4_spark.operators.vectors import dot
     from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
         IVF_N_CENTROIDS,
         IVF_NPROBE,
@@ -142,7 +142,7 @@ def test_ivf_assignment_is_map_only(spark):
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     cent = embn.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cid"),
@@ -760,3 +760,36 @@ def test_quality_train_step_single_pass_no_expand(spark):
     from tools.plan_audit import raw_fact_broadcasts
 
     assert raw_fact_broadcasts(plan) == []
+
+
+def test_no_private_imports_across_plan_modules():
+    """Shared kernels live in operators/, not in one plan module imported
+    by another: no module under plans/ or streaming/ may import an
+    ``_underscore`` name from a plans module other than itself, and
+    operators/ imports nothing from plans/ at all (the kernel layer sits
+    below the plans). Static AST scan, no Spark."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "gmall_flink_realtime4_spark"
+    bad = []
+    for sub in ("plans", "streaming", "operators"):
+        for path in sorted((pkg / sub).glob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if not isinstance(node, ast.ImportFrom):
+                    continue
+                # resolve relative imports against the package layout
+                parts = [sub] if node.level == 1 else []
+                target = ".".join(parts + ([node.module] if node.module else []))
+                if not (target == "plans" or target.startswith("plans.")):
+                    continue
+                where = f"{sub}/{path.name}:{node.lineno}"
+                if sub == "operators":
+                    bad.append(f"{where} imports from {target}")
+                    continue
+                if target == f"plans.{path.stem}":
+                    continue
+                for alias in node.names:
+                    if alias.name.startswith("_"):
+                        bad.append(f"{where} imports {alias.name} from {target}")
+    assert not bad, bad

@@ -475,7 +475,7 @@ def test_topcells_prerank_margin_survives_boundary_vectors(spark, seed):
     PRESCORE_MARGIN_E9 bound)."""
     import pyspark.sql.functions as F
 
-    from gmall_flink_realtime4_spark.plans.llm_queries import _dot
+    from gmall_flink_realtime4_spark.operators.vectors import dot
     from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
         _probe_cells,
         _topcells,
@@ -487,7 +487,7 @@ def test_topcells_prerank_margin_survives_boundary_vectors(spark, seed):
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     cent = embn.filter(F.col("vec_id") < 7).select(
         F.col("vec_id").alias("cid"),
@@ -502,7 +502,7 @@ def test_topcells_prerank_margin_survives_boundary_vectors(spark, seed):
     }
     slow = {
         r.vec_id: list(r.cells)
-        for r in _topcells(embn, cent, 2, dot=_dot)
+        for r in _topcells(embn, cent, 2, dot=dot)
         .select("vec_id", _probe_cells().alias("cells"))
         .collect()
     }
@@ -820,7 +820,7 @@ def test_minhash_lsh_matches_python_model_exactly(spark):
     import hashlib
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.operators.text import (
         MINHASH_B,
         MINHASH_K,
         MINHASH_R,
@@ -1017,12 +1017,12 @@ def test_clusters_match_python_union_find_exactly(spark):
     import hashlib
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        DUP_CLUSTER_THRESHOLD_PM,
+    from gmall_flink_realtime4_spark.operators.text import (
         MINHASH_B,
         MINHASH_K,
         MINHASH_R,
     )
+    from gmall_flink_realtime4_spark.plans.llm_scale_queries import DUP_CLUSTER_THRESHOLD_PM
 
     sf = "/root/testdata/sf0.001"
     rows = spark.read.parquet(f"{sf}/documents.parquet").select(

@@ -308,9 +308,7 @@ def test_incremental_ahash_soak_restart(spark, tmp_path):
     (the codec runs once per image, in its arrival batch — a replay that
     re-decoded and double-appended would duplicate band keys and emitted
     pairs)."""
-    from gmall_flink_realtime4_spark.plans.llm_multimodal import (
-        _fixed_ppm_frame,
-    )
+    from gmall_flink_realtime4_spark.plans.llm_multimodal import fixed_ppm_frame
     from gmall_flink_realtime4_spark.streaming.incremental import (
         incremental_ahash_pairs,
     )
@@ -319,7 +317,7 @@ def test_incremental_ahash_soak_restart(spark, tmp_path):
     expected = _rows(
         queries()["llm_multimodal_image_neardup_pairs"](spark, SF), cols
     )
-    imgs = _fixed_ppm_frame(spark, SF)
+    imgs = fixed_ppm_frame(spark, SF)
     state = str(tmp_path / "ah_state")
     sink = str(tmp_path / "ah_pairs")
 

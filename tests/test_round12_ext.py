@@ -63,24 +63,20 @@ def test_incremental_clusters_soak_restart(spark, tmp_path):
 
 
 def test_two_phase_topk_property_random_frames(spark):
-    """Hypothesis property over the r12 two-phase exact top-k helpers:
-    on RANDOM scored frames — duplicate scores (ties must break on the
-    candidate id), candidates colliding into the same phase-1 slice,
-    fewer candidates than k, empty queries — both `_topk_per_qid`
-    (ascending distance order) and `_ranked_topk_per_query` (descending
-    score order, rank emitted) must equal the brute-force python sort.
-    This pins the claim the plan rewrite leans on: phase-1 slicing can
-    never evict a global top-k row, for ANY slice assignment."""
+    """Hypothesis property over the two-phase exact top-k helper
+    (`operators.topk.two_phase_topk`): on RANDOM scored frames — duplicate
+    scores (ties must break on the candidate id), candidates colliding
+    into the same phase-1 slice, fewer candidates than k, empty queries —
+    per-qid ascending distance order, per-query descending score order
+    (rank emitted) and the unpartitioned global sample must each equal
+    the brute-force python sort, for salts 1, 3 and 8. This pins the
+    claim the plan rewrite leans on: phase-1 slicing can never evict a
+    global top-k row, for ANY slice assignment."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
-        ADC_TOPK,
-        _topk_per_qid,
-    )
-    from gmall_flink_realtime4_spark.plans.llm_queries import (
-        _ranked_topk_per_query,
-    )
+    from gmall_flink_realtime4_spark.operators.topk import two_phase_topk
+    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import ADC_TOPK
 
     row = st.tuples(
         st.integers(min_value=0, max_value=2),      # qid
@@ -93,8 +89,8 @@ def test_two_phase_topk_property_random_frames(spark):
         deadline=None,
         suppress_health_check=[HealthCheck.too_slow],
     )
-    @given(st.lists(row, min_size=0, max_size=60))
-    def check(rows):
+    @given(st.lists(row, min_size=0, max_size=60), st.sampled_from([1, 3, 8]))
+    def check(rows, salt):
         # one row per (qid, candidate): the engines' scored frames are
         # post-aggregation, so the pair key is unique by construction
         seen, uniq = set(), []
@@ -108,7 +104,10 @@ def test_two_phase_topk_property_random_frames(spark):
             [(q, v, s) for q, v, s in uniq], "qid long, vec_id long, ad2 long"
         )
         got_asc = sorted(
-            (r["qid"], r["vec_id"]) for r in _topk_per_qid(asc, "ad2").collect()
+            (r["qid"], r["vec_id"])
+            for r in two_phase_topk(
+                asc, ["qid"], "vec_id", ["ad2", "vec_id"], ADC_TOPK, salt=salt
+            ).collect()
         )
         exp_asc = []
         for q in {q for q, _, _ in uniq}:
@@ -122,7 +121,14 @@ def test_two_phase_topk_property_random_frames(spark):
         )
         got_desc = sorted(
             (r["query_vec_id"], r["neighbor_vec_id"], r["rank"])
-            for r in _ranked_topk_per_query(desc, 5).collect()
+            for r in two_phase_topk(
+                desc,
+                ["query_vec_id"],
+                "neighbor_vec_id",
+                [F.col("cos_sim_e9").desc(), F.col("neighbor_vec_id")],
+                5,
+                salt=salt,
+            ).collect()
         )
         exp_desc = []
         for q in {q for q, _, _ in uniq}:
@@ -131,5 +137,21 @@ def test_two_phase_topk_property_random_frames(spark):
                 (q, v, i + 1) for i, (_, v) in enumerate(cand[:5])
             ]
         assert got_desc == sorted(exp_desc)
+
+        # no partition column: one global sample over every (qid, vec_id)
+        # row, ordered by (score, qid, vec_id), rank in a custom column
+        got_global = sorted(
+            (r["rnk"], r["qid"], r["vec_id"])
+            for r in two_phase_topk(
+                asc, [], "vec_id", ["ad2", "qid", "vec_id"], 7,
+                salt=salt, rank_col="rnk",
+            ).collect()
+        )
+        exp_global = [
+            (i + 1, q, v) for i, (_, q, v) in enumerate(
+                sorted((s, q, v) for q, v, s in uniq)[:7]
+            )
+        ]
+        assert got_global == exp_global
 
     check()

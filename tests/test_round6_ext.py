@@ -91,9 +91,7 @@ def test_domain_cap_two_phase_equals_one_window(spark):
         for r in queries()["llm_sample_domain_cap"](spark, SF).collect()
     }
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _hexval_sql,
-    )
+    from gmall_flink_realtime4_spark.operators.text import hexval_sql
     from pyspark.sql import Window
 
     d = (
@@ -103,7 +101,7 @@ def test_domain_cap_two_phase_equals_one_window(spark):
             "doc_id",
             F.md5(F.col("doc_id").cast("string")).alias("hx"),
         )
-        .withColumn("u", F.expr(_hexval_sql("hx", "instr")))
+        .withColumn("u", F.expr(hexval_sql("hx", "instr")))
     )
     w = Window.partitionBy("source").orderBy("u", "doc_id")
     ref = {
@@ -206,8 +204,8 @@ def test_image_neardup_recall_is_total_within_radius(spark):
     the full exact pair set from the fingerprint frame in Python and
     compare — banding may never lose a pair inside the radius."""
     from gmall_flink_realtime4_spark.plans.llm_multimodal import (
-        _fixed_ppm_frame,
         ahash_image,
+        fixed_ppm_frame,
     )
     from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
         AHASH_HAM_MAX,
@@ -215,7 +213,7 @@ def test_image_neardup_recall_is_total_within_radius(spark):
 
     fps = {
         r["doc_id"]: r["ahash"]
-        for r in ahash_image(_fixed_ppm_frame(spark, SF))
+        for r in ahash_image(fixed_ppm_frame(spark, SF))
         .filter(F.col("ok"))
         .collect()
     }
@@ -323,10 +321,8 @@ def test_stats_profile_python_model(spark):
 
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _KMV_M,
-        KMV_K,
-    )
+    from gmall_flink_realtime4_spark.operators.text import KMV_M
+    from gmall_flink_realtime4_spark.plans.llm_scale_queries import KMV_K
 
     t = pq.read_table(f"{SF}/orders.parquet").to_pylist()
     cols = {
@@ -356,7 +352,7 @@ def test_stats_profile_python_model(spark):
             est = n
         else:
             v = int(hashes[KMV_K - 1][:12], 16)
-            est = ((KMV_K - 1) * _KMV_M) // max(v, 1)
+            est = ((KMV_K - 1) * KMV_M) // max(v, 1)
         model[c] = (len(t), nn, len(distinct), est)
     got = {
         r["col_name"]: (r["n_rows"], r["n_nonnull"], r["ndv_exact"], r["ndv_kmv_est"])
@@ -373,10 +369,8 @@ def test_join_cardinality_python_model(spark):
 
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _KMV_M,
-        KMV_K,
-    )
+    from gmall_flink_realtime4_spark.operators.text import KMV_M
+    from gmall_flink_realtime4_spark.plans.llm_scale_queries import KMV_K
 
     a_keys = {
         r["o_custkey"]
@@ -393,7 +387,7 @@ def test_join_cardinality_python_model(spark):
     theta_hx = min(ka[min(len(ha), KMV_K) - 1], kb[min(len(hb), KMV_K) - 1])
     theta_v = int(theta_hx[:12], 16)
     below = len({h for h in ka if h < theta_hx} & set(kb))
-    est = (below * _KMV_M) // max(theta_v, 1)
+    est = (below * KMV_M) // max(theta_v, 1)
     exact = len(a_keys & b_keys)
     row = queries()["dq_sketch_join_cardinality"](spark, SF).collect()[0]
     assert (
@@ -572,8 +566,8 @@ def test_pagerank_python_model(spark):
     from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
         PR_DAMP_NUM,
         PR_ITERS,
-        _PPB,
     )
+    from gmall_flink_realtime4_spark.tables import PPB
 
     rows = pq.read_table(f"{SF}/events.parquet").to_pylist()
     by_user: dict[int, list] = {}
@@ -592,14 +586,14 @@ def test_pagerank_python_model(spark):
     outs = {}
     for (s, _d), c in edges.items():
         outs[s] = outs.get(s, 0) + c
-    rank = {v: _PPB // n for v in nodes}
+    rank = {v: PPB // n for v in nodes}
     for _ in range(PR_ITERS):
         contrib = {v: 0 for v in nodes}
         for (s, d), c in edges.items():
             contrib[d] += (rank[s] * c) // outs[s]
         dang = sum(rank[v] for v in nodes if v not in outs)
         rank = {
-            v: ((100 - PR_DAMP_NUM) * (_PPB // n)) // 100
+            v: ((100 - PR_DAMP_NUM) * (PPB // n)) // 100
             + (PR_DAMP_NUM * (contrib[v] + dang // n)) // 100
             for v in nodes
         }

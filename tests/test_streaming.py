@@ -202,10 +202,7 @@ def test_kmv_sketch_windowed_stream_parity(spark, tmp_path):
     values via collect_set) — the mergeable-sketch alternative to the
     tagged dedup-union when exact distinct isn't required. Streaming
     windowed agg == identical batch plan."""
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _KMV_M,
-        _hexval_sql,
-    )
+    from gmall_flink_realtime4_spark.operators.text import KMV_M, hexval_sql
 
     K = 16
 
@@ -219,9 +216,9 @@ def test_kmv_sketch_windowed_stream_parity(spark, tmp_path):
             F.window("ts", "1 day").alias("w"), "event_type"
         ).agg(F.array_sort(F.collect_set("hx")).alias("arr"))
         kth = F.element_at("arr", F.least(F.size("arr"), F.lit(K)))
-        v = F.expr(_hexval_sql("element_at(arr, least(size(arr), {}))".format(K), "instr"))
+        v = F.expr(hexval_sql("element_at(arr, least(size(arr), {}))".format(K), "instr"))
         est = F.when(F.size("arr") < K, F.size("arr").cast("bigint")).otherwise(
-            F.expr(f"cast(({K - 1} * {_KMV_M}) as bigint)") / v
+            F.expr(f"cast(({K - 1} * {KMV_M}) as bigint)") / v
         )
         return agged.select(
             F.col("w.start").alias("stt"),
@@ -1367,9 +1364,7 @@ def test_incremental_ahash_pairs_matches_batch(spark, tmp_path):
     batch where its later image arrives) — with only fingerprints in
     state (no payload retention)."""
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_multimodal import (
-        _fixed_ppm_frame,
-    )
+    from gmall_flink_realtime4_spark.plans.llm_multimodal import fixed_ppm_frame
     from gmall_flink_realtime4_spark.streaming.incremental import (
         incremental_ahash_pairs,
     )
@@ -1378,7 +1373,7 @@ def test_incremental_ahash_pairs_matches_batch(spark, tmp_path):
     expected = _rows(
         queries()["llm_multimodal_image_neardup_pairs"](spark, SF), cols
     )
-    imgs = _fixed_ppm_frame(spark, SF)
+    imgs = fixed_ppm_frame(spark, SF)
     state = str(tmp_path / "ah_state")
     out_rows = []
     for bid in range(3):
@@ -1396,15 +1391,13 @@ def test_incremental_ahash_pairs_matches_batch(spark, tmp_path):
 def test_incremental_ahash_replay_is_idempotent(spark, tmp_path):
     """Replaying an aHash micro-batch must rewrite identical fingerprint
     state (overwrite, never append) and re-emit the same pairs."""
-    from gmall_flink_realtime4_spark.plans.llm_multimodal import (
-        _fixed_ppm_frame,
-    )
+    from gmall_flink_realtime4_spark.plans.llm_multimodal import fixed_ppm_frame
     from gmall_flink_realtime4_spark.streaming.incremental import (
         incremental_ahash_pairs,
     )
 
     cols = ["doc_a", "doc_b", "hamming", "is_exact"]
-    imgs = _fixed_ppm_frame(spark, SF)
+    imgs = fixed_ppm_frame(spark, SF)
     half = imgs.filter(F.col("doc_id") % 2 == 0)
     state = str(tmp_path / "ah_state")
     first = _rows(incremental_ahash_pairs(spark, half, state, 0), cols)
